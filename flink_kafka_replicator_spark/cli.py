@@ -399,14 +399,12 @@ def index_stats_main(argv: list[str], spark=None) -> int:
 
     from . import sinks
 
-    meta: dict = {}
-    if args.kind == "minhash":
-        meta = sinks._read_index_meta(args.dir)
-    elif args.kind == "vector":
-        meta = sinks._read_vindex_meta(args.dir)
-    elif args.kind == "lexical":
-        meta = sinks._read_lexindex_meta(args.dir)
     # corpus shards carry no meta pointer — the layout IS the state
+    meta = (
+        {}
+        if args.kind == "corpus"
+        else sinks.read_index_meta(args.kind, args.dir)
+    )
 
     files = _glob.glob(
         _os.path.join(args.dir, "**", "*.parquet"), recursive=True

@@ -10,6 +10,14 @@ same shard regardless of input partitioning — idempotent overwrite at
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -464,269 +472,431 @@ def _check_writer_fence(out_dir: str, token: str | None) -> None:
         )
 
 
-# ------------------------------------------------------------ near-dup index
+# ------------------------------------------------- delta-log commit core
+#
+# The minhash, vector and lexical indexes share ONE on-disk protocol, a
+# delta log, and this section is its only implementation:
+#
+# - row tables are hive-partitioned by ``delta_id``; partitions are
+#   immutable once committed, and a replayed delta dynamically
+#   overwrites only its own;
+# - a JSON meta pointer lists the committed ids (``delta_ids``), the
+#   last claimed id, the tombstone deltas and, for a family that keeps
+#   merged stats, the current versioned stats dir (``<prefix>K``);
+# - every mutation claims the next CONTIGUOUS id, writes its
+#   partitions, derives what it commits from the read-back, re-checks
+#   the writer fence and swaps the pointer LAST. Readers prune every
+#   scan to the committed ids, so a crash leaves only invisible orphans
+#   that the next compaction sweeps.
+#
+# A family is one ``_DeltaLog`` spec; its own code keeps only what
+# really differs (stats merges, vector encoding, analyzers).
 
-BANDS_SUBDIR = "bands"
-BAND_STATS_PREFIX = "band_stats_v"
-INDEX_META_FILE = "INDEX_META.json"
 
-
-def _index_meta_path(out_dir: str) -> str:
-    import os
-
-    return os.path.join(out_dir, INDEX_META_FILE)
-
-
-def _read_index_meta(out_dir: str) -> dict:
-    import json
-
-    with open(_index_meta_path(out_dir), encoding="utf-8") as fh:
-        return json.load(fh)
-
-
-def _write_index_meta(out_dir: str, meta: dict) -> None:
-    """Atomic pointer update (write-then-rename). On a local/HDFS-like
-    FS the rename is atomic; an object store deployment swaps this for
-    a conditional-put of the pointer object — the index layout itself
-    (immutable band partitions + immutable versioned stats dirs) needs
-    no stronger primitive than the single pointer swap."""
-    import json
-    import os
-    import tempfile
-
-    fd, tmp = tempfile.mkstemp(dir=out_dir, prefix=".meta_", suffix=".tmp")
+def _swap_pointer(path: str, meta: dict) -> None:
+    """Atomic pointer update (write-then-rename) — the ONE place an
+    index or model meta pointer is written. ``mkstemp`` gives every
+    writer its own temp file, so a fenced writer racing the new lease
+    holder can never rename a torn JSON into place (the ``.meta_*.tmp``
+    name never matches ``*META*.json``). On a local/HDFS-like FS the
+    rename is atomic; an object-store deployment swaps this for a
+    conditional put of the pointer object — the immutable partitions
+    and versioned stats dirs need no stronger primitive."""
+    fd, tmp = tempfile.mkstemp(
+        dir=os.path.dirname(path), prefix=".meta_", suffix=".tmp"
+    )
     with os.fdopen(fd, "w", encoding="utf-8") as fh:
         json.dump(meta, fh)
-    os.replace(tmp, _index_meta_path(out_dir))
+    os.replace(tmp, path)
 
 
-def write_minhash_index(
-    df: DataFrame, out_dir: str, id_col: str = "doc_id", text_col: str = "text"
-) -> None:
-    """Persist the near-dup index artifact: the banded-minhash table
-    ``(id, band_key)`` PLUS per-band-key occurrence counts.
+def _committed_only(raw: DataFrame, committed: list) -> DataFrame:
+    """Partition-prune a delta-partitioned table to the committed ids."""
+    return raw.filter(F.col("delta_id").isin(committed)).drop("delta_id")
 
-    The statistics are the point. Incremental dedup joins each new batch
-    against this index on ``band_key``, and LSH hygiene must drop
-    degenerate hot keys on BOTH sides — but re-counting the index side's
-    keys per ingested batch is an aggregate over the (huge, static)
-    index. Writing the counts once at build time turns that into a
-    pushed ``n <= MAX_BUCKET`` filter on a tiny stats parquet: per-batch
-    work then touches the index only through the bipartite equi-join.
 
-    Layout (append-able, see ``append_minhash_delta``):
-    - ``bands/delta_id=K/`` — band rows, hive-partitioned by the delta
-      that introduced them (the base build is delta 0); partitions are
-      immutable once committed, a replayed delta dynamically overwrites
-      only its own partition.
-    - ``band_stats_vK/`` — full merged stats as of delta K (tiny).
-    - ``INDEX_META.json`` — the atomically-swapped pointer: which stats
-      version is current, the last applied delta id, AND the explicit
-      list of committed delta ids. Readers prune the band scan to
-      exactly the committed ids, so a crash between a delta's band
-      write and its pointer swap leaves the uncommitted partition
-      invisible — including to readers arriving after LATER deltas
-      commit (contiguity is enforced at append time, so an orphaned
-      partition can only ever be overwritten by its own replay, never
-      skipped past).
-
-    The stats are aggregated from the PERSISTED band files (read-back,
-    not the in-memory plan) so they describe exactly what a later reader
-    sees, even if the banding expression changes between versions.
-    """
-    spark = df.sparkSession
-    bands_path = f"{out_dir}/{BANDS_SUBDIR}"
-    from .functions.similarity import banded_minhash
-
-    # An in-place REBUILD over an existing index must first retract the
-    # meta pointer: the static overwrite below wipes old delta
-    # partitions, and a crash between that wipe and the new pointer
-    # swap would otherwise leave the OLD meta referencing vanished
-    # deltas — a reader would silently see a truncated index paired
-    # with stale stats. With the pointer gone, the crash window reads
-    # as a loud "rebuild required" instead.
-    import os as _os
-
-    try:
-        _os.remove(_index_meta_path(out_dir))
-    except FileNotFoundError:
-        pass
-    banded = (
-        banded_minhash(df, id_col, text_col)
-        .select(F.col(id_col), "band_key")
-        .withColumn("delta_id", F.lit(0))
+def _merge_additive(
+    old: DataFrame, counts: DataFrame, key: str, col: str, sign: int
+) -> DataFrame:
+    """``old (key, col)`` plus (append, ``sign=1``) or minus (delete,
+    ``sign=-1``) ``counts (key, d)``: the exact inverse pair every
+    additive index statistic obeys. Keys that reach zero leave the
+    table, as a rebuild over the survivors would omit them."""
+    a = F.coalesce(F.col(col), F.lit(0))
+    b = F.coalesce(F.col("d"), F.lit(0))
+    merged = old.join(counts, key, "full_outer").select(
+        key, (a + b if sign > 0 else a - b).alias(col)
     )
-    (
-        banded.write.mode("overwrite")
-        # STATIC overwrite on the base build: wipe the whole bands dir,
-        # so rebuilding over a delta-extended index cannot leave ghost
-        # delta partitions behind (dynamic mode would only replace
-        # delta_id=0 and a stale meta-less reader could see the rest).
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("delta_id")
-        .parquet(bands_path)
-    )
-    (
-        # explicit schema on the read-back: a base build over an EMPTY
-        # (or all-degenerate) corpus writes zero partition directories,
-        # and schema inference would fail where an empty index is a
-        # legitimate state (it grows by append) — the schema is the
-        # plan's own, known without running it
-        spark.read.schema(banded.schema)
-        .parquet(bands_path)
-        .groupBy("band_key")
-        .agg(F.count("*").alias("n"))
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/{BAND_STATS_PREFIX}0")
-    )
-    from .functions.similarity import BAND_HASH_VERSION
-
-    _write_index_meta(
-        out_dir,
-        {
-            "stats_version": 0,
-            "last_delta_id": 0,
-            "delta_ids": [0],
-            # banding-hash fingerprint: bands built with one hash never
-            # equi-join bands built with another, so a mixed-hash index
-            # would be SILENT recall loss — readers/appenders refuse a
-            # mismatch loudly instead (round 9: xxhash64 → md5-32)
-            "band_hash": BAND_HASH_VERSION,
-            # lets readers reconstruct the band schema when the index
-            # is empty (zero partition dirs → nothing to infer from)
-            "id_col": id_col,
-        },
-    )
+    return merged if sign > 0 else merged.filter(F.col(col) > 0)
 
 
-def _check_band_hash(meta: dict, out_dir: str) -> None:
-    from .functions.similarity import BAND_HASH_VERSION
+@dataclass(frozen=True)
+class _DeltaLog:
+    """One index family's delta-log spec, and the protocol steps every
+    family shares."""
 
-    got = meta.get("band_hash", "xxhash64-v1")
-    if got != BAND_HASH_VERSION:
-        raise ValueError(
-            f"minhash index at {out_dir} was banded with hash "
-            f"'{got}' but the engine bands with "
-            f"'{BAND_HASH_VERSION}' — joining them silently finds "
-            "nothing; rebuild the index with write_minhash_index"
-        )
+    meta_file: str
+    missing: str  # the "not an index" message, formatted with out_dir
+    tables: dict  # row table -> compaction sort column (None: unsorted)
+    id_col: str
+    key_table: str  # the table whose ids a delete retracts
+    check: Callable[[dict, str], None]
+    stats_prefix: str | None = None
+    stats_key: str | None = None
+    count_dirs: tuple = ()  # compaction file-count roots (default: tables)
 
+    def path(self, out_dir: str) -> str:
+        return os.path.join(out_dir, self.meta_file)
 
-def append_minhash_delta(
-    df: DataFrame,
-    out_dir: str,
-    delta_id: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    extra_meta: dict | None = None,
-    writer_token: str | None = None,
-) -> bool:
-    """Extend a persisted minhash index with a new document batch —
-    WITHOUT rebuilding it. Work is proportional to the DELTA (band the
-    batch, count its keys) plus one outer-merge against the tiny stats
-    table; the huge band table is never re-aggregated or rewritten.
+    def read(self, out_dir: str) -> dict:
+        path = self.path(out_dir)
+        if not os.path.isfile(path):
+            raise FileNotFoundError(self.missing.format(out_dir=out_dir))
+        with open(path, encoding="utf-8") as fh:
+            return json.load(fh)
 
-    Idempotent under replay: ``delta_id`` must be CONTIGUOUS (a
-    streaming batch id): a delta at or below the last applied id is a
-    no-op (returns False), and a delta that would skip an id raises —
-    allowing a gap would let an orphaned band partition (written but
-    never pointer-committed) become visible once a higher delta
-    commits, with no matching counts in the merged stats. A replay
-    after a crash between the band write and the pointer swap rewrites
-    only its own band partition (dynamic overwrite) and re-derives the
-    stats from the last COMMITTED version, so double-application
-    cannot happen.
+    def write(self, out_dir: str, meta: dict) -> None:
+        _swap_pointer(self.path(out_dir), meta)
 
-    Crash-safety order: (1) band partition write, (2) merged stats
-    version write, (3) atomic pointer swap. Readers only ever see
-    pointer-committed state. Stats versions older than the previous one
-    are pruned after the swap (the previous survives one cycle so an
-    in-flight reader holding the old pointer still resolves).
-    """
-    import glob as _glob
-    import os
-    import shutil
+    def load(self, out_dir: str) -> dict:
+        meta = self.read(out_dir)
+        self.check(meta, out_dir)
+        return meta
 
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_index_meta(out_dir)
-    _check_band_hash(meta, out_dir)
-    if delta_id <= meta["last_delta_id"]:
-        return False
-    if delta_id != meta["last_delta_id"] + 1:
-        raise ValueError(
-            f"append_minhash_delta: delta_id {delta_id} would skip ids "
-            f"(last committed is {meta['last_delta_id']}); delta ids must "
-            "be contiguous so uncommitted partitions stay invisible"
-        )
-    spark = df.sparkSession
-    bands_path = f"{out_dir}/{BANDS_SUBDIR}"
-    from .functions.similarity import banded_minhash
+    def load_for_write(self, out_dir: str, writer_token: str | None) -> dict:
+        """Fence, then load: the first step of every mutation."""
+        _check_writer_fence(out_dir, writer_token)
+        return self.load(out_dir)
 
-    (
-        banded_minhash(df, id_col, text_col)
-        .select(F.col(id_col), "band_key")
-        .withColumn("delta_id", F.lit(delta_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("delta_id")
-        .parquet(bands_path)
-    )
-    # merge: old stats FULL OUTER delta counts (counted from the
-    # persisted delta partition — read-back, like the base build)
-    delta_counts = (
-        spark.read.parquet(bands_path)
-        .filter(F.col("delta_id") == delta_id)
-        .groupBy("band_key")
-        .agg(F.count("*").alias("dn"))
-    )
-    old_stats = spark.read.parquet(
-        f"{out_dir}/{BAND_STATS_PREFIX}{meta['stats_version']}"
-    )
-    merged = (
-        old_stats.join(delta_counts, "band_key", "full_outer")
-        .select(
-            "band_key",
-            (
-                F.coalesce(F.col("n"), F.lit(0))
-                + F.coalesce(F.col("dn"), F.lit(0))
-            ).alias("n"),
-        )
-    )
-    merged.write.mode("overwrite").parquet(
-        f"{out_dir}/{BAND_STATS_PREFIX}{delta_id}"
-    )
-    prev_version = meta["stats_version"]
-    committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
-    )
-    new_meta = dict(meta)
-    new_meta.update(
-        {
-            "stats_version": delta_id,
-            "last_delta_id": delta_id,
-            "delta_ids": committed + [delta_id],
-        }
-    )
-    if extra_meta:
-        # e.g. the streaming batch cursor (last_batch_id) — committed
-        # ATOMICALLY with the delta pointer so a crash can never admit
-        # a delta without advancing the cursor (double-apply on replay)
-        new_meta.update(extra_meta)
-    # re-fence at the commit point: a takeover during the (slow) band
-    # and stats writes must abort BEFORE the pointer swap — the
-    # uncommitted partitions are invisible and the next compaction
-    # sweeps them
-    _check_writer_fence(out_dir, writer_token)
-    _write_index_meta(out_dir, new_meta)
-    # prune stats versions older than the previous one
-    for path in _glob.glob(os.path.join(out_dir, f"{BAND_STATS_PREFIX}*")):
+    @staticmethod
+    def committed(meta: dict) -> list:
+        # a meta from before the explicit list committed 0..last
+        return meta.get("delta_ids", list(range(meta["last_delta_id"] + 1)))
+
+    def id_of(self, meta: dict) -> str:
+        return meta.get("id_col", self.id_col)
+
+    def stats_dir(self, out_dir: str, version: int) -> str:
+        return f"{out_dir}/{self.stats_prefix}{version}"
+
+    def retract(self, out_dir: str) -> None:
+        """Drop the pointer before a base build's static overwrite
+        wipes old delta partitions: a crash mid-rebuild must read as a
+        loud "rebuild required", never as a truncated index under stale
+        meta."""
         try:
-            v = int(os.path.basename(path)[len(BAND_STATS_PREFIX):])
-        except ValueError:
-            continue
-        if v < prev_version:
-            shutil.rmtree(path, ignore_errors=True)
-    return True
+            os.remove(self.path(out_dir))
+        except FileNotFoundError:
+            pass
+
+    @staticmethod
+    def write_delta(
+        frame: DataFrame,
+        out_dir: str,
+        table: str,
+        delta_id: int,
+        static: bool = False,
+    ) -> None:
+        (
+            frame.withColumn("delta_id", F.lit(delta_id))
+            .write.mode("overwrite")
+            # STATIC on a base build wipes the whole table, so a rebuild
+            # over a delta-extended index leaves no ghost partitions;
+            # DYNAMIC replaces only this delta's own partition
+            .option(
+                "partitionOverwriteMode", "static" if static else "dynamic"
+            )
+            .partitionBy("delta_id")
+            .parquet(f"{out_dir}/{table}")
+        )
+
+    def rows(
+        self,
+        spark: SparkSession,
+        out_dir: str,
+        meta: dict,
+        tables: tuple = (),
+    ) -> list[DataFrame]:
+        """The committed, tombstone-filtered view of ``tables`` (default:
+        all): the one read every serving path and compaction shares."""
+        id_col = self.id_of(meta)
+        tombs = _committed_tombstones(spark, out_dir, meta, id_col)
+        return [
+            _minus_tombstones(
+                _committed_only(
+                    spark.read.parquet(f"{out_dir}/{t}"),
+                    self.committed(meta),
+                ),
+                tombs,
+                id_col,
+            )
+            for t in tables or self.tables
+        ]
+
+    @staticmethod
+    def claim(meta: dict, delta_id: int, verb: str) -> bool:
+        """Contiguous delta ids: an id at or below the last commit is a
+        replay (no-op, False); one that would skip ids raises — a gap
+        would let an orphaned partition (written, never committed)
+        become visible once a higher delta commits."""
+        last = meta["last_delta_id"]
+        if delta_id <= last:
+            return False
+        if delta_id != last + 1:
+            raise ValueError(
+                f"{verb}: delta_id {delta_id} would skip ids (last "
+                f"committed is {last}); delta ids must be contiguous so "
+                "uncommitted partitions stay invisible"
+            )
+        return True
+
+    def commit(
+        self,
+        out_dir: str,
+        meta: dict,
+        new_id: int,
+        writer_token: str | None,
+        updates: dict,
+        write: Callable[[str, dict], None] | None = None,
+    ) -> None:
+        """Swap the pointer to delta ``new_id``. Re-fence first: a lease
+        takeover during the (slow) partition writes must abort BEFORE
+        the swap — the uncommitted partitions stay invisible and the
+        next compaction sweeps them. After the swap, prune stats
+        versions older than the previous one (it survives one cycle so
+        an in-flight reader holding the old pointer still resolves)."""
+        new = {**meta, **updates, "last_delta_id": new_id}
+        if self.stats_key:
+            new[self.stats_key] = new_id
+        _check_writer_fence(out_dir, writer_token)
+        (write or self.write)(out_dir, new)
+        if not self.stats_key:
+            return
+        for path in glob.glob(os.path.join(out_dir, f"{self.stats_prefix}*")):
+            try:
+                v = int(os.path.basename(path)[len(self.stats_prefix):])
+            except ValueError:
+                continue
+            if v < meta[self.stats_key]:
+                shutil.rmtree(path, ignore_errors=True)
+
+    def append(
+        self,
+        out_dir: str,
+        delta_id: int,
+        writer_token: str | None,
+        extra_meta: dict | None,
+        verb: str,
+        encode: Callable[[dict], dict],
+        restat: Callable[[dict, int], dict] = lambda meta, delta_id: {},
+    ) -> bool:
+        """Delta append: claim → ``encode(meta)``'s table partitions →
+        ``restat`` (merges the stats version from the read-back and
+        returns counter updates) → commit. ``extra_meta`` (e.g. the
+        streaming batch cursor) rides in the same atomic swap, so a
+        crash can never admit a delta without advancing the cursor."""
+        meta = self.load_for_write(out_dir, writer_token)
+        if not self.claim(meta, delta_id, verb):
+            return False
+        for table, frame in encode(meta).items():
+            self.write_delta(frame, out_dir, table, delta_id)
+        updates = restat(meta, delta_id)
+        updates["delta_ids"] = self.committed(meta) + [delta_id]
+        updates.update(extra_meta or {})
+        self.commit(out_dir, meta, delta_id, writer_token, updates)
+        return True
+
+    def delete(
+        self,
+        spark: SparkSession,
+        drop_ids: DataFrame,
+        out_dir: str,
+        writer_token: str | None,
+        id_col: str | None = None,
+        restat: Callable[[dict, DataFrame, int], dict] = (
+            lambda meta, persisted, new_id: {}
+        ),
+    ) -> dict:
+        """Tombstone delta: the live (committed, not yet tombstoned)
+        ids in ``drop_ids`` land as partition ``last + 1``; ``restat``
+        decrements the stats from the PERSISTED partition (read-back);
+        the pointer swap commits both. Already-tombstoned and unknown
+        ids are ignored, and an all-no-op call claims no delta id."""
+        meta = self.load_for_write(out_dir, writer_token)
+        id_col = id_col or self.id_col
+        committed = self.committed(meta)
+        keys = _committed_only(
+            spark.read.parquet(f"{out_dir}/{self.key_table}"), committed
+        ).select(id_col).distinct()
+        active = _minus_tombstones(
+            keys, _committed_tombstones(spark, out_dir, meta, id_col), id_col
+        ).join(drop_ids.select(id_col).distinct(), id_col, "left_semi")
+        if active.limit(1).count() == 0:
+            # nothing to do — write nothing (an empty partitioned write
+            # would leave a schema-less tombstones dir)
+            return {"n_docs_deleted": 0, "delta_id": None}
+        new_id = meta["last_delta_id"] + 1
+        self.write_delta(
+            active.select(id_col).distinct().coalesce(1),
+            out_dir,
+            TOMBSTONES_SUBDIR,
+            new_id,
+        )
+        persisted = (
+            spark.read.parquet(f"{out_dir}/{TOMBSTONES_SUBDIR}")
+            .filter(F.col("delta_id") == new_id)
+            .select(id_col)
+        )
+        n_deleted = persisted.count()
+        updates = restat(meta, persisted, new_id)
+        updates["delta_ids"] = committed + [new_id]
+        updates["tombstone_delta_ids"] = meta.get(
+            "tombstone_delta_ids", []
+        ) + [new_id]
+        self.commit(out_dir, meta, new_id, writer_token, updates)
+        return {"n_docs_deleted": int(n_deleted), "delta_id": new_id}
+
+    def sweep(self, out_dir: str, meta: dict) -> None:
+        for table in self.tables:
+            _sweep_orphan_partitions(
+                f"{out_dir}/{table}", self.committed(meta)
+            )
+        _sweep_orphan_partitions(
+            f"{out_dir}/{TOMBSTONES_SUBDIR}",
+            meta.get("tombstone_delta_ids", []),
+        )
+
+    def fold(
+        self,
+        out_dir: str,
+        meta: dict,
+        frames: dict,
+        writer_token: str | None,
+        updates: dict | None = None,
+        write: Callable[[str, dict], None] | None = None,
+    ) -> int:
+        """Commit ``frames`` (every row table, tombstones already folded
+        out) as ONE fresh delta ``last + 1`` that replaces all committed
+        deltas: invisible until the pointer flips to ``delta_ids =
+        [last + 1]``; old partitions and folded tombstones are pruned
+        only after the swap. A crash before it leaves the old index
+        intact plus orphans the next sweep removes. Returns the id."""
+        new_id = meta["last_delta_id"] + 1
+        for table, frame in frames.items():
+            self.write_delta(frame, out_dir, table, new_id)
+        if self.stats_key:
+            # byte-copy: a fold moves rows but adds/removes none (stats
+            # were decremented at delete time), so they stay exact
+            new_stats = self.stats_dir(out_dir, new_id)
+            shutil.rmtree(new_stats, ignore_errors=True)
+            shutil.copytree(
+                self.stats_dir(out_dir, meta[self.stats_key]), new_stats
+            )
+        self.commit(
+            out_dir,
+            meta,
+            new_id,
+            writer_token,
+            {
+                **(updates or {}),
+                "delta_ids": [new_id],
+                "tombstone_delta_ids": [],
+            },
+            write,
+        )
+        for table in self.tables:
+            for d in self.committed(meta):
+                shutil.rmtree(
+                    os.path.join(out_dir, table, f"delta_id={d}"),
+                    ignore_errors=True,
+                )
+        for t in meta.get("tombstone_delta_ids", []):
+            shutil.rmtree(
+                os.path.join(out_dir, TOMBSTONES_SUBDIR, f"delta_id={t}"),
+                ignore_errors=True,
+            )
+        return new_id
+
+    def compact(
+        self,
+        spark: SparkSession,
+        out_dir: str,
+        files: int,
+        writer_token: str | None,
+    ) -> dict:
+        """Small-file compaction: orphan sweep, then (unless it is a
+        no-op) every committed delta rewritten into ``files`` files of
+        one fresh partition via :meth:`fold`, sorted by the table's
+        sort column so row-group pruning recovers full selectivity.
+        Returns {"files_before", "files_after", "compacted"}."""
+        if files < 1:
+            raise ValueError(f"files must be >= 1, got {files}")
+        meta = self.load_for_write(out_dir, writer_token)
+        committed = self.committed(meta)
+        self.sweep(out_dir, meta)
+
+        def count_files() -> int:
+            return sum(
+                len(
+                    glob.glob(
+                        os.path.join(out_dir, d, "**", "*.parquet"),
+                        recursive=True,
+                    )
+                )
+                for d in self.count_dirs or self.tables
+            )
+
+        before = count_files()
+        if not committed or (
+            not meta.get("tombstone_delta_ids")  # pending deletions fold
+            and len(committed) == 1
+            and not _single_delta_needs_compaction(
+                os.path.join(out_dir, next(iter(self.tables))),
+                committed[0],
+                files,
+            )
+        ):
+            return {
+                "files_before": before,
+                "files_after": before,
+                "compacted": False,
+            }
+        frames = {}
+        for (table, sort), rows in zip(
+            self.tables.items(), self.rows(spark, out_dir, meta)
+        ):
+            frames[table] = (
+                rows.repartition(files, sort).sortWithinPartitions(sort)
+                if sort
+                else rows.repartition(files)
+            )
+        self.fold(out_dir, meta, frames, writer_token)
+        return {
+            "files_before": before,
+            "files_after": count_files(),
+            "compacted": True,
+        }
+
+    def admit(
+        self, out_dir: str, batch_id: int
+    ) -> tuple[bool, int | None, dict]:
+        """Streaming batch admission (see the note below):
+        (replay, next delta id, meta). Raises on a cursor mismatch
+        deeper than the one-step crash replay."""
+        meta = self.load(out_dir)
+        last_batch = meta.get("last_batch_id", -1)
+        if batch_id < last_batch:
+            raise ValueError(
+                f"streaming ingest: batch {batch_id} is below the "
+                f"index's admitted-batch cursor {last_batch} at "
+                f"{out_dir} — the stream checkpoint does not match the "
+                "index (fresh checkpoint against an extended index?); "
+                "data would be silently dropped. Resume the original "
+                "checkpoint or rebuild the index."
+            )
+        if batch_id == last_batch:
+            return True, None, meta  # one-step crash replay: admitted
+        return False, meta["last_delta_id"] + 1, meta
 
 
 def _sweep_orphan_partitions(table_path: str, committed: list) -> None:
@@ -738,12 +908,8 @@ def _sweep_orphan_partitions(table_path: str, committed: list) -> None:
     already requires to be free of concurrent writers. An orphan from
     a crashed APPEND is safe to drop too: its replay rewrites the
     partition from scratch (dynamic overwrite)."""
-    import glob as _glob
-    import os
-    import shutil
-
     keep = {str(d) for d in committed}
-    for path in _glob.glob(os.path.join(table_path, "delta_id=*")):
+    for path in glob.glob(os.path.join(table_path, "delta_id=*")):
         if os.path.basename(path).split("=", 1)[1] not in keep:
             shutil.rmtree(path, ignore_errors=True)
 
@@ -756,15 +922,10 @@ def _single_delta_needs_compaction(
     written with repartition(8)) is still compactable via the CLI's
     ``--files`` even though there is nothing to merge across deltas;
     only a delta that already fits the target is a no-op."""
-    import glob as _glob
-    import os
-
     return (
         len(
-            _glob.glob(
-                os.path.join(
-                    table_dir, f"delta_id={delta_id}", "*.parquet"
-                )
+            glob.glob(
+                os.path.join(table_dir, f"delta_id={delta_id}", "*.parquet")
             )
         )
         > files
@@ -798,21 +959,6 @@ def _single_delta_needs_compaction(
 # dropped document.
 
 TOMBSTONES_SUBDIR = "tombstones"
-
-
-def _write_tombstone_partition(
-    ids: DataFrame, out_dir: str, delta_id: int, id_col: str
-) -> None:
-    (
-        ids.select(id_col)
-        .distinct()
-        .coalesce(1)
-        .withColumn("delta_id", F.lit(delta_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("delta_id")
-        .parquet(f"{out_dir}/{TOMBSTONES_SUBDIR}")
-    )
 
 
 def _committed_tombstones(
@@ -855,6 +1001,233 @@ def _minus_tombstones(
     )
 
 
+# ------------------------------------------- streaming batch admission
+#
+# Streaming ingest must NOT derive delta ids from the micro-batch id:
+# compaction legitimately advances last_delta_id (the compacted rows
+# land as a fresh pointer-committed partition), after which a
+# batch-id-derived delta maps at-or-below the committed id and the
+# batch is silently skipped — new data lost with no error. The durable
+# cursor lives in the index meta instead: ``last_batch_id`` records the
+# highest ADMITTED streaming batch, committed atomically with the
+# delta pointer swap, and each batch appends as ``last_delta_id + 1``
+# regardless of how compaction renumbered the partitions. Replay of
+# the cursor batch is a no-op; a batch BELOW the cursor means the
+# stream checkpoint does not match the index (fresh checkpoint against
+# an extended index) and raises rather than silently dropping data.
+
+
+def _index_log(kind: str) -> _DeltaLog:
+    return {"minhash": _MINHASH, "vector": _VECTOR, "lexical": _LEXICAL}[kind]
+
+
+def read_index_meta(kind: str, out_dir: str) -> dict:
+    """The committed meta pointer of a persisted ``kind`` index
+    (minhash, vector or lexical) exactly as stored — no validation, so
+    stats tooling can inspect an index the engine would refuse."""
+    return _index_log(kind).read(out_dir)
+
+
+def admit_index_batch(
+    kind: str, out_dir: str, batch_id: int
+) -> tuple[bool, int | None, dict]:
+    """The streaming admission check for a ``kind`` index:
+    (replay of the cursor batch, next delta id, meta). Raises when
+    ``batch_id`` is below the admitted-batch cursor."""
+    return _index_log(kind).admit(out_dir, batch_id)
+
+
+# ------------------------------------------------------------ near-dup index
+
+BANDS_SUBDIR = "bands"
+BAND_STATS_PREFIX = "band_stats_v"
+INDEX_META_FILE = "INDEX_META.json"
+
+
+def _check_band_hash(meta: dict, out_dir: str) -> None:
+    from .functions.similarity import BAND_HASH_VERSION
+
+    got = meta.get("band_hash", "xxhash64-v1")
+    if got != BAND_HASH_VERSION:
+        raise ValueError(
+            f"minhash index at {out_dir} was banded with hash "
+            f"'{got}' but the engine bands with "
+            f"'{BAND_HASH_VERSION}' — joining them silently finds "
+            "nothing; rebuild the index with write_minhash_index"
+        )
+
+
+_MINHASH = _DeltaLog(
+    meta_file=INDEX_META_FILE,
+    missing=(
+        "{out_dir} is not a minhash index: no " + INDEX_META_FILE
+        + " and no legacy band_stats/ layout — rebuild with "
+        "write_minhash_index"
+    ),
+    tables={BANDS_SUBDIR: None},
+    id_col="doc_id",
+    key_table=BANDS_SUBDIR,
+    check=_check_band_hash,
+    stats_prefix=BAND_STATS_PREFIX,
+    stats_key="stats_version",
+)
+_index_meta_path = _MINHASH.path
+
+
+def _merge_band_stats(
+    spark: SparkSession,
+    out_dir: str,
+    meta: dict,
+    bands: DataFrame,
+    new_id: int,
+    sign: int,
+) -> dict:
+    """Band-stats version ``new_id`` = the current counts ± the
+    per-band-key counts of ``bands`` (the delta's or the dropped docs'
+    band rows)."""
+    _merge_additive(
+        spark.read.parquet(_MINHASH.stats_dir(out_dir, meta["stats_version"])),
+        bands.groupBy("band_key").agg(F.count("*").alias("d")),
+        "band_key",
+        "n",
+        sign,
+    ).write.mode("overwrite").parquet(_MINHASH.stats_dir(out_dir, new_id))
+    return {}
+
+
+def write_minhash_index(
+    df: DataFrame, out_dir: str, id_col: str = "doc_id", text_col: str = "text"
+) -> None:
+    """Persist the near-dup index artifact: the banded-minhash table
+    ``(id, band_key)`` PLUS per-band-key occurrence counts.
+
+    The statistics are the point. Incremental dedup joins each new batch
+    against this index on ``band_key``, and LSH hygiene must drop
+    degenerate hot keys on BOTH sides — but re-counting the index side's
+    keys per ingested batch is an aggregate over the (huge, static)
+    index. Writing the counts once at build time turns that into a
+    pushed ``n <= MAX_BUCKET`` filter on a tiny stats parquet: per-batch
+    work then touches the index only through the bipartite equi-join.
+
+    Layout (append-able, see ``append_minhash_delta``):
+    - ``bands/delta_id=K/`` — band rows, hive-partitioned by the delta
+      that introduced them (the base build is delta 0); partitions are
+      immutable once committed, a replayed delta dynamically overwrites
+      only its own partition.
+    - ``band_stats_vK/`` — full merged stats as of delta K (tiny).
+    - ``INDEX_META.json`` — the atomically-swapped pointer: which stats
+      version is current, the last applied delta id, AND the explicit
+      list of committed delta ids. Readers prune the band scan to
+      exactly the committed ids, so a crash between a delta's band
+      write and its pointer swap leaves the uncommitted partition
+      invisible — including to readers arriving after LATER deltas
+      commit (contiguity is enforced at append time, so an orphaned
+      partition can only ever be overwritten by its own replay, never
+      skipped past).
+
+    The stats are aggregated from the PERSISTED band files (read-back,
+    not the in-memory plan) so they describe exactly what a later reader
+    sees, even if the banding expression changes between versions.
+    """
+    from .functions.similarity import BAND_HASH_VERSION, banded_minhash
+
+    spark = df.sparkSession
+    _MINHASH.retract(out_dir)
+    banded = banded_minhash(df, id_col, text_col).select(
+        F.col(id_col), "band_key"
+    )
+    _MINHASH.write_delta(banded, out_dir, BANDS_SUBDIR, 0, static=True)
+    (
+        # explicit schema on the read-back: a base build over an EMPTY
+        # (or all-degenerate) corpus writes zero partition directories,
+        # and schema inference would fail where an empty index is a
+        # legitimate state (it grows by append) — the schema is the
+        # plan's own, known without running it
+        spark.read.schema(banded.withColumn("delta_id", F.lit(0)).schema)
+        .parquet(f"{out_dir}/{BANDS_SUBDIR}")
+        .groupBy("band_key")
+        .agg(F.count("*").alias("n"))
+        .write.mode("overwrite")
+        .parquet(_MINHASH.stats_dir(out_dir, 0))
+    )
+    _MINHASH.write(
+        out_dir,
+        {
+            "stats_version": 0,
+            "last_delta_id": 0,
+            "delta_ids": [0],
+            # banding-hash fingerprint: bands built with one hash never
+            # equi-join bands built with another, so a mixed-hash index
+            # would be SILENT recall loss — readers/appenders refuse a
+            # mismatch loudly instead (round 9: xxhash64 → md5-32)
+            "band_hash": BAND_HASH_VERSION,
+            # lets readers reconstruct the band schema when the index
+            # is empty (zero partition dirs → nothing to infer from)
+            "id_col": id_col,
+        },
+    )
+
+
+def append_minhash_delta(
+    df: DataFrame,
+    out_dir: str,
+    delta_id: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    extra_meta: dict | None = None,
+    writer_token: str | None = None,
+) -> bool:
+    """Extend a persisted minhash index with a new document batch —
+    WITHOUT rebuilding it. Work is proportional to the DELTA (band the
+    batch, count its keys) plus one outer-merge against the tiny stats
+    table; the huge band table is never re-aggregated or rewritten.
+
+    Idempotent under replay: ``delta_id`` must be CONTIGUOUS (a
+    streaming batch id): a delta at or below the last applied id is a
+    no-op (returns False), and a delta that would skip an id raises —
+    allowing a gap would let an orphaned band partition (written but
+    never pointer-committed) become visible once a higher delta
+    commits, with no matching counts in the merged stats. A replay
+    after a crash between the band write and the pointer swap rewrites
+    only its own band partition (dynamic overwrite) and re-derives the
+    stats from the last COMMITTED version, so double-application
+    cannot happen.
+
+    Crash-safety order: (1) band partition write, (2) merged stats
+    version write, (3) atomic pointer swap. Readers only ever see
+    pointer-committed state. Stats versions older than the previous one
+    are pruned after the swap (the previous survives one cycle so an
+    in-flight reader holding the old pointer still resolves).
+    """
+    from .functions.similarity import banded_minhash
+
+    spark = df.sparkSession
+    return _MINHASH.append(
+        out_dir,
+        delta_id,
+        writer_token,
+        extra_meta,
+        "append_minhash_delta",
+        lambda meta: {
+            BANDS_SUBDIR: banded_minhash(df, id_col, text_col).select(
+                F.col(id_col), "band_key"
+            )
+        },
+        # merge the counts of the PERSISTED delta partition (read-back,
+        # like the base build) into the last committed stats version
+        lambda meta, delta_id: _merge_band_stats(
+            spark,
+            out_dir,
+            meta,
+            spark.read.parquet(f"{out_dir}/{BANDS_SUBDIR}").filter(
+                F.col("delta_id") == delta_id
+            ),
+            delta_id,
+            1,
+        ),
+    )
+
+
 def delete_minhash_docs(
     spark: SparkSession,
     drop_ids: DataFrame,
@@ -877,83 +1250,24 @@ def delete_minhash_docs(
     in.
 
     Returns {"n_docs_deleted", "delta_id" (or None)}."""
-    import glob as _glob
-    import os
-    import shutil
-
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_index_meta(out_dir)
-    _check_band_hash(meta, out_dir)
-    committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
+    return _MINHASH.delete(
+        spark,
+        drop_ids,
+        out_dir,
+        writer_token,
+        id_col,
+        lambda meta, persisted, new_id: _merge_band_stats(
+            spark,
+            out_dir,
+            meta,
+            _committed_only(
+                spark.read.parquet(f"{out_dir}/{BANDS_SUBDIR}"),
+                _MINHASH.committed(meta),
+            ).join(persisted, id_col, "left_semi"),
+            new_id,
+            -1,
+        ),
     )
-    bands_path = f"{out_dir}/{BANDS_SUBDIR}"
-    bands = (
-        spark.read.parquet(bands_path)
-        .filter(F.col("delta_id").isin(committed))
-        .drop("delta_id")
-    )
-    prior = _committed_tombstones(spark, out_dir, meta, id_col)
-    active = _minus_tombstones(
-        bands.select(id_col).distinct(), prior, id_col
-    ).join(drop_ids.select(id_col).distinct(), id_col, "left_semi")
-    if active.limit(1).count() == 0:
-        # nothing to do — claim no delta id, write nothing (an empty
-        # partitioned write would leave a schema-less tombstones dir)
-        return {"n_docs_deleted": 0, "delta_id": None}
-    new_id = meta["last_delta_id"] + 1
-    _write_tombstone_partition(active, out_dir, new_id, id_col)
-    # read-back discipline (the append contract): decrements are
-    # derived from the PERSISTED tombstone partition
-    persisted = (
-        spark.read.parquet(f"{out_dir}/{TOMBSTONES_SUBDIR}")
-        .filter(F.col("delta_id") == new_id)
-        .select(id_col)
-    )
-    n_deleted = persisted.count()
-    dropped_counts = (
-        bands.join(persisted, id_col, "left_semi")
-        .groupBy("band_key")
-        .agg(F.count("*").alias("dn"))
-    )
-    old_stats = spark.read.parquet(
-        f"{out_dir}/{BAND_STATS_PREFIX}{meta['stats_version']}"
-    )
-    merged = (
-        old_stats.join(dropped_counts, "band_key", "full_outer")
-        .select(
-            "band_key",
-            (
-                F.coalesce(F.col("n"), F.lit(0))
-                - F.coalesce(F.col("dn"), F.lit(0))
-            ).alias("n"),
-        )
-        .filter(F.col("n") > 0)
-    )
-    merged.write.mode("overwrite").parquet(
-        f"{out_dir}/{BAND_STATS_PREFIX}{new_id}"
-    )
-    prev_version = meta["stats_version"]
-    new_meta = dict(meta)
-    new_meta.update(
-        {
-            "stats_version": new_id,
-            "last_delta_id": new_id,
-            "delta_ids": committed + [new_id],
-            "tombstone_delta_ids": meta.get("tombstone_delta_ids", [])
-            + [new_id],
-        }
-    )
-    _check_writer_fence(out_dir, writer_token)
-    _write_index_meta(out_dir, new_meta)
-    for path in _glob.glob(os.path.join(out_dir, f"{BAND_STATS_PREFIX}*")):
-        try:
-            v = int(os.path.basename(path)[len(BAND_STATS_PREFIX):])
-        except ValueError:
-            continue
-        if v < prev_version:
-            shutil.rmtree(path, ignore_errors=True)
-    return {"n_docs_deleted": int(n_deleted), "delta_id": new_id}
 
 
 def compact_minhash_index(
@@ -989,107 +1303,7 @@ def compact_minhash_index(
     appends) so an in-flight unpinned reader still resolves its stats.
 
     Returns {"files_before", "files_after", "compacted"}."""
-    import glob as _glob
-    import os
-    import shutil
-
-    if files < 1:
-        raise ValueError(f"files must be >= 1, got {files}")
-    bands_path = f"{out_dir}/{BANDS_SUBDIR}"
-
-    def _count_files() -> int:
-        return len(
-            _glob.glob(
-                os.path.join(bands_path, "**", "*.parquet"), recursive=True
-            )
-        )
-
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_index_meta(out_dir)
-    committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
-    )
-    tomb_ids = meta.get("tombstone_delta_ids", [])
-    _sweep_orphan_partitions(bands_path, committed)
-    _sweep_orphan_partitions(f"{out_dir}/{TOMBSTONES_SUBDIR}", tomb_ids)
-    before = _count_files()
-    if not committed or (
-        not tomb_ids  # pending deletions always warrant the fold
-        and len(committed) == 1
-        and not _single_delta_needs_compaction(
-            bands_path, committed[0], files
-        )
-    ):
-        return {
-            "files_before": before,
-            "files_after": before,
-            "compacted": False,
-        }
-    new_id = meta["last_delta_id"] + 1
-    rows = (
-        spark.read.parquet(bands_path)
-        .filter(F.col("delta_id").isin(committed))
-        .drop("delta_id")
-    )
-    # fold pending tombstones in physically: the rewrite drops the
-    # deleted docs' rows (stats were already decremented at delete
-    # time, so the byte-copied stats below stay exact)
-    id_col = [c for c in rows.columns if c != "band_key"][0]
-    rows = _minus_tombstones(
-        rows, _committed_tombstones(spark, out_dir, meta, id_col), id_col
-    )
-    (
-        rows.repartition(files)
-        .withColumn("delta_id", F.lit(new_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("delta_id")
-        .parquet(bands_path)
-    )
-    # stats: byte-copy — compaction moves rows between partitions but
-    # adds/removes none, so the current merged counts stay exact
-    old_stats = f"{out_dir}/{BAND_STATS_PREFIX}{meta['stats_version']}"
-    new_stats = f"{out_dir}/{BAND_STATS_PREFIX}{new_id}"
-    shutil.rmtree(new_stats, ignore_errors=True)
-    shutil.copytree(old_stats, new_stats)
-    prev_stats_version = meta["stats_version"]
-    new_meta = dict(meta)  # preserve extra keys (streaming batch cursor)
-    new_meta.update(
-        {
-            "stats_version": new_id,
-            "last_delta_id": new_id,
-            "delta_ids": [new_id],
-            # tombstones are folded into the rewrite above
-            "tombstone_delta_ids": [],
-        }
-    )
-    # re-fence at the commit point (see append_minhash_delta)
-    _check_writer_fence(out_dir, writer_token)
-    _write_index_meta(out_dir, new_meta)
-    # prune: old band partitions (now invisible), folded tombstones,
-    # and stats versions older than the pre-compaction current
-    # (one-cycle grace)
-    for d in committed:
-        shutil.rmtree(
-            os.path.join(bands_path, f"delta_id={d}"), ignore_errors=True
-        )
-    for t in tomb_ids:
-        shutil.rmtree(
-            os.path.join(out_dir, TOMBSTONES_SUBDIR, f"delta_id={t}"),
-            ignore_errors=True,
-        )
-    for path in _glob.glob(os.path.join(out_dir, f"{BAND_STATS_PREFIX}*")):
-        try:
-            v = int(os.path.basename(path)[len(BAND_STATS_PREFIX):])
-        except ValueError:
-            continue
-        if v < prev_stats_version:
-            shutil.rmtree(path, ignore_errors=True)
-    return {
-        "files_before": before,
-        "files_after": _count_files(),
-        "compacted": True,
-    }
+    return _MINHASH.compact(spark, out_dir, files, writer_token)
 
 
 def read_minhash_index(
@@ -1115,38 +1329,29 @@ def read_minhash_index(
     no ``INDEX_META.json``) are read via a legacy fallback; anything
     else without a meta file raises a descriptive error rather than a
     bare FileNotFoundError."""
-    import os
-
-    if not os.path.isfile(_index_meta_path(out_dir)):
-        legacy_stats = os.path.join(out_dir, "band_stats")
-        if os.path.isdir(legacy_stats):
-            if max_delta_id is not None:
-                # a legacy index has no delta partitions to pin, and
-                # silently returning the full view would break the
-                # replay-snapshot contract a pinning caller relies on
-                raise ValueError(
-                    f"{out_dir} uses the legacy (pre-delta) index layout "
-                    "and cannot serve a pinned snapshot "
-                    f"(max_delta_id={max_delta_id}) — rebuild with "
-                    "write_minhash_index or read unpinned"
-                )
-            bands = spark.read.parquet(f"{out_dir}/{BANDS_SUBDIR}")
-            if "delta_id" in bands.columns:
-                bands = bands.drop("delta_id")
-            return bands, spark.read.parquet(legacy_stats)
-        raise FileNotFoundError(
-            f"{out_dir} is not a minhash index: no {INDEX_META_FILE} and "
-            "no legacy band_stats/ layout — rebuild with "
-            "write_minhash_index"
-        )
-    meta = _read_index_meta(out_dir)
-    _check_band_hash(meta, out_dir)
+    legacy_stats = os.path.join(out_dir, "band_stats")
+    if not os.path.isfile(_index_meta_path(out_dir)) and os.path.isdir(
+        legacy_stats
+    ):
+        if max_delta_id is not None:
+            # a legacy index has no delta partitions to pin, and
+            # silently returning the full view would break the
+            # replay-snapshot contract a pinning caller relies on
+            raise ValueError(
+                f"{out_dir} uses the legacy (pre-delta) index layout "
+                "and cannot serve a pinned snapshot "
+                f"(max_delta_id={max_delta_id}) — rebuild with "
+                "write_minhash_index or read unpinned"
+            )
+        bands = spark.read.parquet(f"{out_dir}/{BANDS_SUBDIR}")
+        if "delta_id" in bands.columns:
+            bands = bands.drop("delta_id")
+        return bands, spark.read.parquet(legacy_stats)
+    meta = _MINHASH.load(out_dir)
     effective = meta["last_delta_id"]
     if max_delta_id is not None:
         effective = min(effective, max_delta_id)
-    all_committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
-    )
+    all_committed = _MINHASH.committed(meta)
     committed = [d for d in all_committed if d <= effective]
     if not committed:
         # only reachable via pinning below the compaction floor: the
@@ -1158,7 +1363,7 @@ def read_minhash_index(
             f"{min(all_committed)}) — pre-compaction snapshots are "
             "discarded; rebuild or read the current snapshot"
         )
-    stats_path = f"{out_dir}/{BAND_STATS_PREFIX}{effective}"
+    stats_path = _MINHASH.stats_dir(out_dir, effective)
     if effective != meta["stats_version"] and not os.path.isdir(stats_path):
         raise FileNotFoundError(
             f"minhash index snapshot delta_id={effective} is no longer "
@@ -1166,6 +1371,7 @@ def read_minhash_index(
             "previous version survives one append cycle) — rebuild or "
             "read the current snapshot"
         )
+    id_col = _MINHASH.id_of(meta)
     try:
         raw = spark.read.parquet(f"{out_dir}/{BANDS_SUBDIR}")
     except AnalysisException:
@@ -1173,55 +1379,22 @@ def read_minhash_index(
         # has no partition directories to infer from — serve the empty
         # band table with the schema the meta pointer recorded
         raw = spark.createDataFrame(
-            [],
-            f"{meta.get('id_col', 'doc_id')} bigint,"
-            " band_key string, delta_id int",
+            [], f"{id_col} bigint, band_key string, delta_id int"
         )
-    bands = raw.filter(F.col("delta_id").isin(committed)).drop("delta_id")
     # deletions visible at this snapshot: anti-join the committed
     # tombstone set (stats were decremented at delete time, so the
     # stats version already matches this filtered view)
-    id_col = [c for c in bands.columns if c != "band_key"][0]
-    tombs = _committed_tombstones(
-        spark, out_dir, meta, id_col, max_delta_id=effective
+    bands = _minus_tombstones(
+        _committed_only(raw, committed),
+        _committed_tombstones(spark, out_dir, meta, id_col, effective),
+        id_col,
     )
-    bands = _minus_tombstones(bands, tombs, id_col)
     return bands, spark.read.parquet(stats_path)
 
 
 # ------------------------------------------------------------ vector index
 
 VINDEX_META_FILE = "VINDEX_META.json"
-
-
-def _vindex_meta_path(out_dir: str) -> str:
-    import os
-
-    return os.path.join(out_dir, VINDEX_META_FILE)
-
-
-def _read_vindex_meta(out_dir: str) -> dict:
-    import json
-    import os
-
-    path = _vindex_meta_path(out_dir)
-    if not os.path.isfile(path):
-        raise FileNotFoundError(
-            f"{out_dir} is not a vector index: no {VINDEX_META_FILE} — "
-            "build with write_vector_index"
-        )
-    with open(path, encoding="utf-8") as fh:
-        return json.load(fh)
-
-
-def _write_vindex_meta(out_dir: str, meta: dict) -> None:
-    import json
-    import os
-
-    path = _vindex_meta_path(out_dir)
-    with open(path + ".tmp", "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(path + ".tmp", path)
 
 
 def _vindex_model_dirs(meta: dict) -> tuple[str, str]:
@@ -1245,13 +1418,9 @@ def _sweep_orphan_model_dirs(out_dir: str, meta: dict | None) -> None:
     pointer swap (the delta-partition orphan sweep's twin). Safe by
     the same argument: an unreferenced dir is invisible to every
     reader, so deleting it cannot change any committed result."""
-    import glob as _glob
-    import os
-    import shutil
-
     keep = set(_vindex_model_dirs(meta)) if meta else set()
     for pat in ("centroids_g*", "pq_codebook_g*"):
-        for d in _glob.glob(os.path.join(out_dir, pat)):
+        for d in glob.glob(os.path.join(out_dir, pat)):
             if os.path.basename(d) not in keep:
                 shutil.rmtree(d, ignore_errors=True)
 
@@ -1294,6 +1463,79 @@ def _check_vindex_geometry(meta: dict, out_dir: str) -> None:
         )
 
 
+_VECTOR = _DeltaLog(
+    meta_file=VINDEX_META_FILE,
+    missing=(
+        "{out_dir} is not a vector index: no " + VINDEX_META_FILE
+        + " — build with write_vector_index"
+    ),
+    # postings sort by IVF cell: the serve paths filter cid to the
+    # probe set, so cid-tight parquet row groups turn probe pruning
+    # into IO pruning (the lexical index's term-sort precedent)
+    tables={"postings": "cid", "pq_codes": None},
+    id_col="vec_id",
+    key_table="postings",
+    check=_check_vindex_geometry,
+)
+_read_vindex_meta = _VECTOR.read
+_write_vindex_meta = _VECTOR.write
+
+
+def _cents_of(centroids: DataFrame) -> list[tuple[int, list[float], float]]:
+    return [
+        (int(r["cid"]), [float(x) for x in r["cvec"]], float(r["nrm"]))
+        for r in sorted(centroids.collect(), key=lambda r: r["cid"])
+    ]
+
+
+def _write_vindex_base(
+    spark: SparkSession,
+    out_dir: str,
+    cents: list[tuple[int, list[float], float]],
+    codebook: DataFrame,
+    postings: DataFrame,
+    codes: DataFrame,
+    **model_meta,
+) -> None:
+    """The base-build commit both vector builders share: pointer
+    retracted, models + delta-0 tables written, pointer swapped last."""
+    from .functions import pipeline_queries as pq
+
+    _VECTOR.retract(out_dir)
+    # a rebuild over a previously-RETRAINED index must also wipe its
+    # generation-suffixed model dirs (the static partition overwrite
+    # below only covers postings/pq_codes)
+    _sweep_orphan_model_dirs(out_dir, None)
+    (
+        pq._cents_df(spark, cents)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{out_dir}/centroids")
+    )
+    codebook.coalesce(1).write.mode("overwrite").parquet(
+        f"{out_dir}/pq_codebook"
+    )
+    _VECTOR.write_delta(
+        postings.sortWithinPartitions("cid"), out_dir, "postings", 0, True
+    )
+    _VECTOR.write_delta(codes, out_dir, "pq_codes", 0, static=True)
+    _VECTOR.write(
+        out_dir,
+        {
+            "format_version": 2,
+            "pq_m": pq.PQ_M,
+            "pq_k": pq.PQ_K,
+            "pq_subdim": pq.PQ_SUBDIM,
+            "pq_lloyd_rounds": pq.PQ_LLOYD_ROUNDS,
+            **model_meta,
+            "ivf_n_centroids": len(cents),
+            "ivf_n_probe": pq.IVF_N_PROBE,
+            "last_delta_id": 0,
+            "delta_ids": [0],
+        },
+    )
+
+
 def write_vector_index(
     spark: SparkSession,
     sf_dir: str,
@@ -1333,35 +1575,9 @@ def write_vector_index(
     in-session ``knn_ivf_pq``. At 100 TB this write is the index-build
     job; searches never touch the raw embeddings again (the refined
     path point-fetches only its shortlist)."""
-    import os as _os
-
     from .functions import pipeline_queries as pq
 
-    # retract the pointer before the static overwrites below wipe old
-    # delta partitions — a crash mid-rebuild must read as a loud
-    # "rebuild required", never as a truncated index under stale meta
-    # (same contract as write_minhash_index)
-    try:
-        _os.remove(_vindex_meta_path(out_dir))
-    except FileNotFoundError:
-        pass
-    # a rebuild over a previously-RETRAINED index must also wipe its
-    # generation-suffixed model dirs (the static partition overwrite
-    # below only covers postings/pq_codes)
-    _sweep_orphan_model_dirs(out_dir, None)
     cents, _ = pq._ivf_model(spark, sf_dir, n_centroids=n_centroids)
-    (
-        pq._cents_df(spark, cents)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/centroids")
-    )
-    (
-        pq._pq_codebook(spark, sf_dir)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/pq_codebook")
-    )
     if n_centroids is None:
         # default quantizer: the shared materialized session artifact
         postings = pq._knn_assignment(spark, sf_dir).select(
@@ -1381,34 +1597,8 @@ def write_vector_index(
         ids = df.select("vec_id")
         postings = postings.join(ids, "vec_id", "left_semi")
         codes = codes.join(ids, "vec_id", "left_semi")
-    # postings sort by IVF cell: the serve paths filter cid to the
-    # probe set, so cid-tight parquet row groups turn probe pruning
-    # into IO pruning (the lexical index's term-sort precedent)
-    for frame, sub in (
-        (postings.sortWithinPartitions("cid"), "postings"),
-        (codes, "pq_codes"),
-    ):
-        (
-            frame.withColumn("delta_id", F.lit(0))
-            .write.mode("overwrite")
-            # static: a rebuild wipes ghost deltas (minhash precedent)
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("delta_id")
-            .parquet(f"{out_dir}/{sub}")
-        )
-    _write_vindex_meta(
-        out_dir,
-        {
-            "format_version": 2,
-            "pq_m": pq.PQ_M,
-            "pq_k": pq.PQ_K,
-            "pq_subdim": pq.PQ_SUBDIM,
-            "pq_lloyd_rounds": pq.PQ_LLOYD_ROUNDS,
-            "ivf_n_centroids": len(cents),
-            "ivf_n_probe": pq.IVF_N_PROBE,
-            "last_delta_id": 0,
-            "delta_ids": [0],
-        },
+    _write_vindex_base(
+        spark, out_dir, cents, pq._pq_codebook(spark, sf_dir), postings, codes
     )
 
 
@@ -1432,65 +1622,28 @@ def append_vector_delta(
     partitions written before the atomic pointer swap, replays
     dynamically overwrite only their own partitions. Caller contract:
     delta vec_ids are new (an index is keyed by vec_id)."""
-    from .functions import pipeline_queries as pq
 
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_vindex_meta(out_dir)
-    _check_vindex_geometry(meta, out_dir)
-    if delta_id <= meta["last_delta_id"]:
-        return False
-    if delta_id != meta["last_delta_id"] + 1:
-        raise ValueError(
-            f"append_vector_delta: delta_id {delta_id} would skip ids "
-            f"(last committed is {meta['last_delta_id']}); delta ids "
-            "must be contiguous so uncommitted partitions stay invisible"
+    def encode(meta: dict) -> dict:
+        c_sub, cb_sub = _vindex_model_dirs(meta)
+        postings, codes = _encode_vectors(
+            spark,
+            df.select("vec_id", "embedding"),
+            _cents_of(spark.read.parquet(f"{out_dir}/{c_sub}")),
+            spark.read.parquet(f"{out_dir}/{cb_sub}"),
         )
-    c_sub, cb_sub = _vindex_model_dirs(meta)
-    cents = [
-        (int(r["cid"]), [float(x) for x in r["cvec"]], float(r["nrm"]))
-        for r in sorted(
-            spark.read.parquet(f"{out_dir}/{c_sub}").collect(),
-            key=lambda r: r["cid"],
-        )
-    ]
-    codebook = spark.read.parquet(f"{out_dir}/{cb_sub}")
-    e = df.select("vec_id", "embedding")
-    if len(cents) <= 32:
-        assignment = pq._assignment_from(e, cents).select(
-            "vec_id", "nrm", "cid", "pcid"
-        )
-    else:
-        # k-scaled index: the unrolled expression path caps out; the
-        # rowwise builder is bit-identical (pytest-pinned) at any k
-        assignment = pq._assignment_top2_rowwise(
-            e, pq._cents_df(spark, cents), dim=len(cents[0][1])
-        ).select("vec_id", "nrm", "cid", "pcid")
-    frames = (
-        # cid-sorted for probe-filter row-group pruning (see
-        # write_vector_index)
-        (assignment.sortWithinPartitions("cid"), "postings"),
-        (pq._pq_assign(pq._subvectors_of(e), codebook), "pq_codes"),
+        return {
+            "postings": postings.sortWithinPartitions("cid"),
+            "pq_codes": codes,
+        }
+
+    return _VECTOR.append(
+        out_dir,
+        delta_id,
+        writer_token,
+        extra_meta,
+        "append_vector_delta",
+        encode,
     )
-    for frame, sub in frames:
-        (
-            frame.withColumn("delta_id", F.lit(delta_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("delta_id")
-            .parquet(f"{out_dir}/{sub}")
-        )
-    committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
-    )
-    meta["last_delta_id"] = delta_id
-    meta["delta_ids"] = committed + [delta_id]
-    if extra_meta:
-        # committed atomically with the delta pointer (batch cursor)
-        meta.update(extra_meta)
-    # re-fence at the commit point (see append_minhash_delta)
-    _check_writer_fence(out_dir, writer_token)
-    _write_vindex_meta(out_dir, meta)
-    return True
 
 
 def delete_vector_docs(
@@ -1513,75 +1666,7 @@ def delete_vector_docs(
     ignored; an all-no-op call claims no delta id.
 
     Returns {"n_docs_deleted", "delta_id" (or None)}."""
-    import os
-    import shutil
-
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_vindex_meta(out_dir)
-    _check_vindex_geometry(meta, out_dir)
-    committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
-    )
-    postings = (
-        spark.read.parquet(f"{out_dir}/postings")
-        .filter(F.col("delta_id").isin(committed))
-        .select("vec_id")
-    )
-    prior = _committed_tombstones(spark, out_dir, meta, "vec_id")
-    active = _minus_tombstones(
-        postings.distinct(), prior, "vec_id"
-    ).join(drop_ids.select("vec_id").distinct(), "vec_id", "left_semi")
-    if active.limit(1).count() == 0:
-        return {"n_docs_deleted": 0, "delta_id": None}
-    new_id = meta["last_delta_id"] + 1
-    _write_tombstone_partition(active, out_dir, new_id, "vec_id")
-    n_deleted = (
-        spark.read.parquet(f"{out_dir}/{TOMBSTONES_SUBDIR}")
-        .filter(F.col("delta_id") == new_id)
-        .count()
-    )
-    meta["last_delta_id"] = new_id
-    meta["delta_ids"] = committed + [new_id]
-    meta["tombstone_delta_ids"] = meta.get(
-        "tombstone_delta_ids", []
-    ) + [new_id]
-    _check_writer_fence(out_dir, writer_token)
-    _write_vindex_meta(out_dir, meta)
-    return {"n_docs_deleted": int(n_deleted), "delta_id": new_id}
-
-
-# ------------------------------------------- streaming batch admission
-#
-# Streaming ingest must NOT derive delta ids from the micro-batch id:
-# compaction legitimately advances last_delta_id (the compacted rows
-# land as a fresh pointer-committed partition), after which a
-# batch-id-derived delta maps at-or-below the committed id and the
-# batch is silently skipped — new data lost with no error. The durable
-# cursor lives in the index meta instead: ``last_batch_id`` records the
-# highest ADMITTED streaming batch, committed atomically with the
-# delta pointer swap, and each batch appends as ``last_delta_id + 1``
-# regardless of how compaction renumbered the partitions. Replay of
-# the cursor batch is a no-op; a batch BELOW the cursor means the
-# stream checkpoint does not match the index (fresh checkpoint against
-# an extended index) and raises rather than silently dropping data.
-
-
-def _batch_admission(meta: dict, batch_id: int, out_dir: str):
-    """Shared admission decision: (skip, next_delta_id). Raises on a
-    cursor mismatch deeper than the one-step crash replay."""
-    last_batch = meta.get("last_batch_id", -1)
-    if batch_id <= last_batch:
-        if batch_id < last_batch:
-            raise ValueError(
-                f"streaming ingest: batch {batch_id} is below the "
-                f"index's admitted-batch cursor {last_batch} at "
-                f"{out_dir} — the stream checkpoint does not match the "
-                "index (fresh checkpoint against an extended index?); "
-                "data would be silently dropped. Resume the original "
-                "checkpoint or rebuild the index."
-            )
-        return True, None  # one-step crash replay: already admitted
-    return False, meta["last_delta_id"] + 1
+    return _VECTOR.delete(spark, drop_ids, out_dir, writer_token)
 
 
 def append_minhash_batch(
@@ -1595,8 +1680,7 @@ def append_minhash_batch(
     """Admit one streaming micro-batch into a persisted minhash index,
     delta-numbered from the index meta (compaction-safe — see the
     batch-admission note above). Returns False for a replayed batch."""
-    meta = _read_index_meta(out_dir)
-    skip, delta_id = _batch_admission(meta, batch_id, out_dir)
+    skip, delta_id, _ = _MINHASH.admit(out_dir, batch_id)
     if skip:
         return False
     return append_minhash_delta(
@@ -1619,8 +1703,7 @@ def append_vector_batch(
 ) -> bool:
     """Admit one streaming micro-batch of vectors, delta-numbered from
     the index meta (compaction-safe). Returns False for a replay."""
-    meta = _read_vindex_meta(out_dir)
-    skip, delta_id = _batch_admission(meta, batch_id, out_dir)
+    skip, delta_id, _ = _VECTOR.admit(out_dir, batch_id)
     if skip:
         return False
     return append_vector_delta(
@@ -1643,103 +1726,32 @@ def compact_vector_index(
     into ONE fresh partition ``delta_id = last + 1`` (invisible until
     the pointer swap, since readers prune to committed ids), the
     pointer flips to ``delta_ids = [last + 1]``, old partitions are
-    pruned. The centroids and codebook are untouched (frozen at base
-    build); search results are byte-equal before/after (pytest-pinned)
-    and the next append is ``last + 2`` — append == rebuild still
-    holds.
+    pruned. The postings are re-sorted by cell, recovering the
+    selectivity the micro-deltas eroded. The centroids and codebook
+    are untouched (frozen at base build); search results are
+    byte-equal before/after (pytest-pinned) and the next append is
+    ``last + 2`` — append == rebuild still holds.
 
     Returns {"files_before", "files_after", "compacted"}."""
-    import glob as _glob
-    import os
-    import shutil
+    return _VECTOR.compact(spark, out_dir, files, writer_token)
 
-    if files < 1:
-        raise ValueError(f"files must be >= 1, got {files}")
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_vindex_meta(out_dir)
-    _check_vindex_geometry(meta, out_dir)
-    committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
+
+def _vector_snapshot(
+    spark: SparkSession, out_dir: str
+) -> tuple[dict, DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(meta, centroids, postings, pq_codebook, pq_codes) from ONE
+    validated pointer read — every vector serving path resolves its
+    frames and its meta from the same committed version."""
+    meta = _VECTOR.load(out_dir)
+    postings, codes = _VECTOR.rows(spark, out_dir, meta)
+    c_sub, cb_sub = _vindex_model_dirs(meta)
+    return (
+        meta,
+        spark.read.parquet(f"{out_dir}/{c_sub}"),
+        postings,
+        spark.read.parquet(f"{out_dir}/{cb_sub}"),
+        codes,
     )
-    tomb_ids = meta.get("tombstone_delta_ids", [])
-    for sub in ("postings", "pq_codes"):
-        _sweep_orphan_partitions(os.path.join(out_dir, sub), committed)
-    _sweep_orphan_partitions(f"{out_dir}/{TOMBSTONES_SUBDIR}", tomb_ids)
-
-    def _count_files() -> int:
-        return sum(
-            len(
-                _glob.glob(
-                    os.path.join(out_dir, sub, "**", "*.parquet"),
-                    recursive=True,
-                )
-            )
-            for sub in ("postings", "pq_codes")
-        )
-
-    before = _count_files()
-    if not committed or (
-        not tomb_ids  # pending deletions always warrant the fold
-        and len(committed) == 1
-        and not _single_delta_needs_compaction(
-            os.path.join(out_dir, "postings"), committed[0], files
-        )
-    ):
-        return {
-            "files_before": before,
-            "files_after": before,
-            "compacted": False,
-        }
-    new_id = meta["last_delta_id"] + 1
-    tombs = _committed_tombstones(spark, out_dir, meta, "vec_id")
-    for sub in ("postings", "pq_codes"):
-        path = f"{out_dir}/{sub}"
-        rows = (
-            spark.read.parquet(path)
-            .filter(F.col("delta_id").isin(committed))
-            .drop("delta_id")
-        )
-        # fold pending tombstones in physically
-        rows = _minus_tombstones(rows, tombs, "vec_id")
-        if sub == "postings":
-            # re-establish the cid sort the micro-deltas eroded —
-            # compaction is exactly when selectivity gets recovered
-            # (the lexical compactor's term re-sort precedent)
-            rows = rows.repartition(files, "cid").sortWithinPartitions(
-                "cid"
-            )
-        else:
-            rows = rows.repartition(files)
-        (
-            rows
-            .withColumn("delta_id", F.lit(new_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("delta_id")
-            .parquet(path)
-        )
-    meta["last_delta_id"] = new_id
-    meta["delta_ids"] = [new_id]
-    meta["tombstone_delta_ids"] = []
-    # re-fence at the commit point (see append_minhash_delta)
-    _check_writer_fence(out_dir, writer_token)
-    _write_vindex_meta(out_dir, meta)
-    for sub in ("postings", "pq_codes"):
-        for d in committed:
-            shutil.rmtree(
-                os.path.join(out_dir, sub, f"delta_id={d}"),
-                ignore_errors=True,
-            )
-    for t in tomb_ids:
-        shutil.rmtree(
-            os.path.join(out_dir, TOMBSTONES_SUBDIR, f"delta_id={t}"),
-            ignore_errors=True,
-        )
-    return {
-        "files_before": before,
-        "files_after": _count_files(),
-        "compacted": True,
-    }
 
 
 def read_vector_index(
@@ -1750,32 +1762,7 @@ def read_vector_index(
     to committed delta partitions), after validating its geometry
     against the running engine's constants — a quantizer-geometry
     mismatch must fail loudly, not return silently-wrong neighbors."""
-    from .functions import pipeline_queries as pq
-
-    meta = _read_vindex_meta(out_dir)
-    _check_vindex_geometry(meta, out_dir)
-    committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
-    )
-
-    tombs = _committed_tombstones(spark, out_dir, meta, "vec_id")
-
-    def pruned(sub: str) -> DataFrame:
-        return _minus_tombstones(
-            spark.read.parquet(f"{out_dir}/{sub}")
-            .filter(F.col("delta_id").isin(committed))
-            .drop("delta_id"),
-            tombs,
-            "vec_id",
-        )
-
-    c_sub, cb_sub = _vindex_model_dirs(meta)
-    return (
-        spark.read.parquet(f"{out_dir}/{c_sub}"),
-        pruned("postings"),
-        spark.read.parquet(f"{out_dir}/{cb_sub}"),
-        pruned("pq_codes"),
-    )
+    return _vector_snapshot(spark, out_dir)[1:]
 
 
 def _encode_vectors(
@@ -1796,6 +1783,8 @@ def _encode_vectors(
             "vec_id", "nrm", "cid", "pcid"
         )
     else:
+        # k-scaled index: the unrolled expression path caps out; the
+        # rowwise builder is bit-identical (pytest-pinned) at any k
         assignment = pq._assignment_top2_rowwise(
             e, pq._cents_df(spark, cents), dim=len(cents[0][1])
         ).select("vec_id", "nrm", "cid", "pcid")
@@ -1823,82 +1812,39 @@ def write_vector_index_from_df(
     Same crash-safety contract as :func:`write_vector_index`: the meta
     pointer is retracted first, partitions land, the pointer swap
     commits last."""
-    import os as _os
-
     from .functions import pipeline_queries as pq
 
     if kmeans_iters is None:
         kmeans_iters = pq.KMEANS_ITERS
-    try:
-        _os.remove(_vindex_meta_path(out_dir))
-    except FileNotFoundError:
-        pass
-    _sweep_orphan_model_dirs(out_dir, None)
     e = e_df.select("vec_id", "embedding")
     cents = pq._kmeans_centroids_from(
         e, iters=kmeans_iters, n_centroids=n_centroids
     )
     codebook = pq._pq_codebook_from(spark, e)
-    (
-        pq._cents_df(spark, cents)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/centroids")
-    )
-    codebook.coalesce(1).write.mode("overwrite").parquet(
-        f"{out_dir}/pq_codebook"
-    )
     postings, codes = _encode_vectors(spark, e, cents, codebook)
-    for frame, sub in (
-        (postings.sortWithinPartitions("cid"), "postings"),
-        (codes, "pq_codes"),
-    ):
-        (
-            frame.withColumn("delta_id", F.lit(0))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("delta_id")
-            .parquet(f"{out_dir}/{sub}")
-        )
-    _write_vindex_meta(
+    _write_vindex_base(
+        spark,
         out_dir,
-        {
-            "format_version": 2,
-            "pq_m": pq.PQ_M,
-            "pq_k": pq.PQ_K,
-            "pq_subdim": pq.PQ_SUBDIM,
-            "pq_lloyd_rounds": pq.PQ_LLOYD_ROUNDS,
-            "kmeans_iters": kmeans_iters,
-            "ivf_n_centroids": len(cents),
-            "ivf_n_probe": pq.IVF_N_PROBE,
-            "last_delta_id": 0,
-            "delta_ids": [0],
-        },
+        cents,
+        codebook,
+        postings,
+        codes,
+        kmeans_iters=kmeans_iters,
     )
 
 
 def _vindex_survivor_embeddings(
-    spark: SparkSession, out_dir: str, exact_df: DataFrame, meta: dict
+    out_dir: str, exact_df: DataFrame, postings: DataFrame
 ) -> tuple[DataFrame, int]:
     """(survivor embeddings, count): the index's committed vec_ids
-    (pointer-committed postings minus tombstones) joined to their
-    full-width vectors in ``exact_df`` — the corpus' exact-vector
-    table, the same contract as the refined search path (the index
-    stores codes, not raw vectors). Refuses to proceed when the exact
-    table is missing any survivor: a retrain that silently dropped
-    indexed vectors because the corpus table lost rows would commit a
-    shrunken index with no error."""
-    committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
-    )
-    postings = (
-        spark.read.parquet(f"{out_dir}/postings")
-        .filter(F.col("delta_id").isin(committed))
-        .select("vec_id")
-        .distinct()
-    )
-    tombs = _committed_tombstones(spark, out_dir, meta, "vec_id")
-    survivors = _minus_tombstones(postings, tombs, "vec_id")
+    (``postings``: the committed, tombstone-filtered postings view)
+    joined to their full-width vectors in ``exact_df`` — the corpus'
+    exact-vector table, the same contract as the refined search path
+    (the index stores codes, not raw vectors). Refuses to proceed when
+    the exact table is missing any survivor: a retrain that silently
+    dropped indexed vectors because the corpus table lost rows would
+    commit a shrunken index with no error."""
+    survivors = postings.select("vec_id").distinct()
     e = exact_df.select("vec_id", "embedding").join(
         survivors, "vec_id", "left_semi"
     )
@@ -1961,27 +1907,18 @@ def recluster_vector_index(
     ingest resumes exactly where it left off.
 
     Returns {"n_vectors", "generation", "delta_id", "n_centroids"}."""
-    import os
-    import shutil
-
     from .functions import pipeline_queries as pq
 
     if kmeans_iters is None:
         kmeans_iters = pq.KMEANS_ITERS
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_vindex_meta(out_dir)
-    _check_vindex_geometry(meta, out_dir)
+    meta = _VECTOR.load_for_write(out_dir, writer_token)
     # reclaim debris of a previously crashed retrain/append
     _sweep_orphan_model_dirs(out_dir, meta)
-    committed = meta.get(
-        "delta_ids", list(range(meta["last_delta_id"] + 1))
-    )
-    tomb_ids = meta.get("tombstone_delta_ids", [])
-    for sub in ("postings", "pq_codes"):
-        _sweep_orphan_partitions(os.path.join(out_dir, sub), committed)
-    _sweep_orphan_partitions(f"{out_dir}/{TOMBSTONES_SUBDIR}", tomb_ids)
+    _VECTOR.sweep(out_dir, meta)
 
-    e, n_surv = _vindex_survivor_embeddings(spark, out_dir, exact_df, meta)
+    e, n_surv = _vindex_survivor_embeddings(
+        out_dir, exact_df, _VECTOR.rows(spark, out_dir, meta, ("postings",))[0]
+    )
     if n_surv == 0:
         raise ValueError(
             f"vector index at {out_dir} has no committed survivors — "
@@ -2003,49 +1940,25 @@ def recluster_vector_index(
     codebook.coalesce(1).write.mode("overwrite").parquet(
         f"{out_dir}/{cb_sub}"
     )
-    new_id = meta["last_delta_id"] + 1
     postings, codes = _encode_vectors(spark, e, cents, codebook)
-    for frame, sub in (
-        (postings.sortWithinPartitions("cid"), "postings"),
-        (codes, "pq_codes"),
-    ):
-        (
-            frame.withColumn("delta_id", F.lit(new_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("delta_id")
-            .parquet(f"{out_dir}/{sub}")
-        )
-
-    old_model_dirs = _vindex_model_dirs(meta)
-    meta.update(
+    # the single atomic pointer swap flips the model pointers, the
+    # delta pointer and the tombstone fold together; it goes through
+    # the module-level _write_vindex_meta binding
+    new_id = _VECTOR.fold(
+        out_dir,
+        meta,
+        {"postings": postings.sortWithinPartitions("cid"), "pq_codes": codes},
+        writer_token,
         {
             "generation": gen,
             "centroids_subdir": c_sub,
             "pq_codebook_subdir": cb_sub,
             "ivf_n_centroids": len(cents),
             "kmeans_iters": kmeans_iters,
-            "last_delta_id": new_id,
-            "delta_ids": [new_id],
-            "tombstone_delta_ids": [],
-        }
+        },
+        write=_write_vindex_meta,
     )
-    # re-fence at the commit point (see append_vector_delta), then the
-    # single atomic pointer swap
-    _check_writer_fence(out_dir, writer_token)
-    _write_vindex_meta(out_dir, meta)
-    for sub in ("postings", "pq_codes"):
-        for d in committed:
-            shutil.rmtree(
-                os.path.join(out_dir, sub, f"delta_id={d}"),
-                ignore_errors=True,
-            )
-    for t in tomb_ids:
-        shutil.rmtree(
-            os.path.join(out_dir, TOMBSTONES_SUBDIR, f"delta_id={t}"),
-            ignore_errors=True,
-        )
-    for d in old_model_dirs:
+    for d in _vindex_model_dirs(meta):
         if d not in (c_sub, cb_sub):
             shutil.rmtree(os.path.join(out_dir, d), ignore_errors=True)
     return {
@@ -2066,9 +1979,7 @@ def index_cell_histogram(spark: SparkSession, out_dir: str) -> DataFrame:
 
     Returns (cid, n_vectors, share, skew_vs_mean) per committed cell —
     one postings aggregate, no codes/vectors touched."""
-    meta = _read_vindex_meta(out_dir)
-    _check_vindex_geometry(meta, out_dir)
-    _, postings, _, _ = read_vector_index(spark, out_dir)
+    postings = _vector_snapshot(spark, out_dir)[2]
     hist = postings.groupBy("cid").agg(
         F.count("*").cast("bigint").alias("n_vectors")
     )
@@ -2127,9 +2038,8 @@ def recall_drift_report(
 
     from .functions.similarity import as_double, cosine
 
-    meta = _read_vindex_meta(out_dir)
-    _check_vindex_geometry(meta, out_dir)
-    e, _ = _vindex_survivor_embeddings(spark, out_dir, exact_df, meta)
+    snap = _vector_snapshot(spark, out_dir)
+    e, _ = _vindex_survivor_embeddings(out_dir, exact_df, snap[2])
     qs = (
         e.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(sample)
@@ -2161,9 +2071,7 @@ def recall_drift_report(
     )
     # served: fetch k+1 so dropping the self-match still leaves k
     served = (
-        knn_batch_search_from_index(
-            spark, qs, out_dir, k=k + 1, n_probe=n_probe
-        )
+        _knn_batch_search(spark, qs, snap, k=k + 1, n_probe=n_probe)
         .filter(F.col("vec_id") != F.col("qid"))
         .withColumn(
             "rn",
@@ -2246,14 +2154,10 @@ def knn_ivf_pq_from_index(
     pytest pins that identity against ``knn_pq_adc``."""
     from .functions import pipeline_queries as pq
 
-    meta = _read_vindex_meta(out_dir)
-    centroids, postings, codebook, codes = read_vector_index(
+    meta, centroids, postings, codebook, codes = _vector_snapshot(
         spark, out_dir
     )
-    cents = [
-        (int(r["cid"]), [float(x) for x in r["cvec"]], float(r["nrm"]))
-        for r in sorted(centroids.collect(), key=lambda r: r["cid"])
-    ]
+    cents = _cents_of(centroids)
     if n_probe is None:
         n_probe = meta["ivf_n_probe"]
     if n_probe < 1:
@@ -2291,19 +2195,29 @@ def knn_batch_search_from_index(
     in-session ``knn_batch_adc``.
 
     Returns (qid, vec_id, adc_dist, rank<=k) per query."""
+    return _knn_batch_search(
+        spark, queries_df, _vector_snapshot(spark, out_dir), k, n_probe
+    )
+
+
+def _knn_batch_search(
+    spark: SparkSession,
+    queries_df: DataFrame,
+    snap: tuple,
+    k: int,
+    n_probe: int | None,
+) -> DataFrame:
+    """:func:`knn_batch_search_from_index` over an already-resolved
+    :func:`_vector_snapshot`."""
     from pyspark.sql import Window
 
     from .functions import pipeline_queries as pq
 
-    meta = _read_vindex_meta(out_dir)
-    _check_vindex_geometry(meta, out_dir)
+    meta, centroids, postings, codebook, codes = snap
     if n_probe is None:
         n_probe = meta["ivf_n_probe"]
     if n_probe < 1:
         raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    centroids, postings, codebook, codes = read_vector_index(
-        spark, out_dir
-    )
     q = queries_df.select(
         F.col("qid").alias("vec_id"), "embedding"
     )
@@ -2508,9 +2422,6 @@ def write_classifier_model(
     threshold and the feature geometry in MODEL_META.json. Readers
     refuse a geometry-mismatched model (a different bucket count would
     silently hash features onto the wrong weights)."""
-    import json
-    import os
-
     from .functions import pipeline_queries as pq
 
     # retract the meta pointer BEFORE overwriting weights/ (the index
@@ -2532,10 +2443,7 @@ def write_classifier_model(
         "qc_buckets": pq.QC_BUCKETS,
         "label_token": pq.QC_LABEL_TOKEN,
     }
-    path = os.path.join(out_dir, CLASSIFIER_META_FILE)
-    with open(path + ".tmp", "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(path + ".tmp", path)
+    _swap_pointer(os.path.join(out_dir, CLASSIFIER_META_FILE), meta)
 
 
 def read_classifier_model(
@@ -2576,26 +2484,6 @@ LEX_K1 = 1.2
 LEX_B = 0.75
 
 
-def _lexindex_meta_path(out_dir: str) -> str:
-    import os
-
-    return os.path.join(out_dir, LEXINDEX_META_FILE)
-
-
-def _read_lexindex_meta(out_dir: str) -> dict:
-    import json
-    import os
-
-    p = _lexindex_meta_path(out_dir)
-    if not os.path.exists(p):
-        raise FileNotFoundError(
-            f"no lexical index at {out_dir} (missing {LEXINDEX_META_FILE}"
-            "); build one with write_lexical_index"
-        )
-    with open(p, encoding="utf-8") as fh:
-        return json.load(fh)
-
-
 def _lex_tables(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(postings, doclen) over any (doc_id, text) frame — the shared
     tokenize/aggregate pass of the base build and every delta append.
@@ -2605,6 +2493,18 @@ def _lex_tables(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     toks = t.select("doc_id", F.explode("toks").alias("term"))
     postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
     dl = t.select("doc_id", F.size("toks").alias("dl"))
+    return postings, dl
+
+
+def _lex_bpe_tables(
+    d: DataFrame, merges: list[tuple[str, str]]
+) -> tuple[DataFrame, DataFrame]:
+    """(postings, doclen) under a BPE merge list."""
+    from .functions import pipeline_queries as pq
+
+    toks = pq.bpe_token_stream(d, merges)
+    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
+    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
     return postings, dl
 
 
@@ -2624,7 +2524,6 @@ LEX_MERGES_SUBDIR = "analyzer_merges"
 
 def _merges_fingerprint(merges: list[tuple]) -> str:
     import hashlib
-    import json
 
     return hashlib.md5(
         json.dumps([[m[0], m[1]] for m in merges]).encode()
@@ -2674,15 +2573,69 @@ def _lex_analyzer_tables(
     persisted artifact, never the session."""
     if _lex_analyzer(meta) == "whitespace":
         return _lex_tables(d)
-    from .functions import pipeline_queries as pq
+    return _lex_bpe_tables(d, _lex_load_merges(spark, out_dir, meta))
 
-    merges = _lex_load_merges(spark, out_dir, meta)
-    toks = pq.bpe_token_stream(d.select("doc_id", "text"), merges)
-    postings = toks.groupBy("term", "doc_id").agg(
-        F.count("*").alias("tf")
+
+def _check_lex_meta(meta: dict, out_dir: str) -> None:
+    if meta.get("version", 1) < 2:
+        raise ValueError(
+            f"lexical index at {out_dir} uses the v1 flat layout; "
+            "rebuild with write_lexical_index to gain the delta-append "
+            "contract (v1 has no committed-delta pointer, so appends "
+            "against it could not be crash-safe)"
+        )
+    _lex_analyzer(meta)
+
+
+_LEXICAL = _DeltaLog(
+    meta_file=LEXINDEX_META_FILE,
+    missing=(
+        "no lexical index at {out_dir} (missing " + LEXINDEX_META_FILE
+        + "); build one with write_lexical_index"
+    ),
+    # each postings delta is sorted by term so every parquet row group
+    # carries tight term min/max stats (term predicates prune IO)
+    tables={"postings": "term", "doclen": None},
+    id_col="doc_id",
+    key_table="doclen",
+    check=_check_lex_meta,
+    stats_prefix="dfreq_v",
+    stats_key="dfreq_version",
+    count_dirs=("*",),
+)
+_lexindex_meta_path = _LEXICAL.path
+_read_lexindex_meta = _LEXICAL.read
+
+
+def _lex_restat(
+    spark: SparkSession,
+    out_dir: str,
+    meta: dict,
+    postings: DataFrame,
+    doclen: DataFrame,
+    new_id: int,
+    sign: int,
+) -> dict:
+    """Every BM25 statistic is additive over disjoint documents: write
+    dfreq version ``new_id`` = the current df(term) ± the distinct-doc
+    counts of ``postings`` (the delta's, or the dropped docs'), and
+    return the n_docs/sum_dl counters ± those of ``doclen``."""
+    _merge_additive(
+        spark.read.parquet(_LEXICAL.stats_dir(out_dir, meta["dfreq_version"])),
+        postings.groupBy("term").agg(F.countDistinct("doc_id").alias("d")),
+        "term",
+        "df",
+        sign,
+    ).coalesce(1).write.mode("overwrite").parquet(
+        _LEXICAL.stats_dir(out_dir, new_id)
     )
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    return postings, dl
+    s = doclen.agg(
+        F.count("*").alias("n"), F.sum("dl").alias("s")
+    ).collect()[0]
+    return {
+        "n_docs": int(meta["n_docs"]) + sign * int(s["n"]),
+        "sum_dl": int(meta["sum_dl"]) + sign * int(s["s"] or 0),
+    }
 
 
 def write_lexical_index(
@@ -2726,28 +2679,21 @@ def write_lexical_index(
     At 100 TB: postings is one explode (linear in total tokens) + one
     (term, doc_id) map-side-combined aggregate; everything else is
     vocabulary- or doc-count-sized."""
-    import json
-    import os as _os
-
     from .io import load_table
 
-    d = (
-        df
-        if df is not None
-        else load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    # retract the pointer before the static overwrite (see
-    # write_minhash_index: a crash mid-rebuild must read as "rebuild
-    # required", not as stale meta over vanished partitions)
-    try:
-        _os.remove(_lexindex_meta_path(out_dir))
-    except FileNotFoundError:
-        pass
+    # validate BEFORE retracting: a rejected call must leave a live
+    # index serving, not unreadable
     if analyzer not in ("whitespace", "bpe"):
         raise ValueError(
             f"unknown lexical analyzer {analyzer!r}; "
             "supported: whitespace, bpe"
         )
+    d = (
+        df
+        if df is not None
+        else load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    _LEXICAL.retract(out_dir)
     if analyzer == "bpe":
         # BPE analyzer (round 12, VERDICT r11 task 6): train the merge
         # list on the corpus, PERSIST it next to the postings so
@@ -2774,70 +2720,47 @@ def write_lexical_index(
             "n_merges": len(merges),
             "fingerprint": _merges_fingerprint(merges),
         }
-        toks = pq.bpe_token_stream(d, merges)
-        postings = toks.groupBy("term", "doc_id").agg(
-            F.count("*").alias("tf")
-        )
-        dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
+        postings, dl = _lex_bpe_tables(d, merges)
     else:
         analyzer_meta = {"name": "whitespace"}
         postings, dl = _lex_tables(d)
-    (
-        postings.repartition(8, "term")
-        .sortWithinPartitions("term")
-        .withColumn("delta_id", F.lit(0))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("delta_id")
-        .parquet(f"{out_dir}/postings")
+    _LEXICAL.write_delta(
+        postings.repartition(8, "term").sortWithinPartitions("term"),
+        out_dir,
+        "postings",
+        0,
+        static=True,
     )
-    (
-        dl.withColumn("delta_id", F.lit(0))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("delta_id")
-        .parquet(f"{out_dir}/doclen")
-    )
+    _LEXICAL.write_delta(dl, out_dir, "doclen", 0, static=True)
     # stats from the PERSISTED tables (read-back, like the minhash
     # build) so they describe exactly what a later reader sees
-    persisted = spark.read.parquet(f"{out_dir}/postings")
     (
-        persisted.groupBy("term")
+        spark.read.parquet(f"{out_dir}/postings")
+        .groupBy("term")
         .agg(F.countDistinct("doc_id").alias("df"))
         .coalesce(1)
         .write.mode("overwrite")
-        .parquet(f"{out_dir}/dfreq_v0")
+        .parquet(_LEXICAL.stats_dir(out_dir, 0))
     )
     stats = (
         spark.read.parquet(f"{out_dir}/doclen")
         .agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
         .collect()[0]
     )
-    meta = {
-        "version": 2,
-        "n_docs": int(stats["n_docs"]),
-        "sum_dl": int(stats["sum_dl"]),
-        "k1": LEX_K1,
-        "b": LEX_B,
-        "analyzer": analyzer_meta,
-        "dfreq_version": 0,
-        "last_delta_id": 0,
-        "delta_ids": [0],
-    }
-    tmp = _lexindex_meta_path(out_dir) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    _os.replace(tmp, _lexindex_meta_path(out_dir))
-
-
-def _check_lex_version(meta: dict, out_dir: str) -> None:
-    if meta.get("version", 1) < 2:
-        raise ValueError(
-            f"lexical index at {out_dir} uses the v1 flat layout; "
-            "rebuild with write_lexical_index to gain the delta-append "
-            "contract (v1 has no committed-delta pointer, so appends "
-            "against it could not be crash-safe)"
-        )
+    _LEXICAL.write(
+        out_dir,
+        {
+            "version": 2,
+            "n_docs": int(stats["n_docs"]),
+            "sum_dl": int(stats["sum_dl"]),
+            "k1": LEX_K1,
+            "b": LEX_B,
+            "analyzer": analyzer_meta,
+            "dfreq_version": 0,
+            "last_delta_id": 0,
+            "delta_ids": [0],
+        },
+    )
 
 
 def append_lexical_delta(
@@ -2868,102 +2791,44 @@ def append_lexical_delta(
     Readers only ever see pointer-committed state; dfreq versions
     older than the previous are pruned after the swap (one-cycle
     grace for in-flight readers)."""
-    import glob as _glob
-    import os
-    import shutil
-
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_lexindex_meta(out_dir)
-    _check_lex_version(meta, out_dir)
-    if delta_id <= meta["last_delta_id"]:
-        return False
-    if delta_id != meta["last_delta_id"] + 1:
-        raise ValueError(
-            f"append_lexical_delta: delta_id {delta_id} would skip ids "
-            f"(last committed is {meta['last_delta_id']}); delta ids "
-            "must be contiguous so uncommitted partitions stay invisible"
-        )
     spark = df.sparkSession
-    # the delta MUST tokenize with the index's analyzer (resolved
-    # from the persisted artifact, never this session's model cache)
-    postings, dl = _lex_analyzer_tables(
-        spark, out_dir, meta, df.select("doc_id", "text")
-    )
-    (
-        postings.repartition(1, "term")
-        .sortWithinPartitions("term")
-        .withColumn("delta_id", F.lit(delta_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("delta_id")
-        .parquet(f"{out_dir}/postings")
-    )
-    (
-        dl.withColumn("delta_id", F.lit(delta_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("delta_id")
-        .parquet(f"{out_dir}/doclen")
-    )
-    # merge stats from the PERSISTED delta partitions (read-back) so
-    # the committed pointer describes exactly the on-disk rows
-    delta_df = (
-        spark.read.parquet(f"{out_dir}/postings")
-        .filter(F.col("delta_id") == delta_id)
-        .groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("ddf"))
-    )
-    old_dfreq = spark.read.parquet(
-        f"{out_dir}/dfreq_v{meta['dfreq_version']}"
-    )
-    (
-        old_dfreq.join(delta_df, "term", "full_outer")
-        .select(
-            "term",
-            (
-                F.coalesce(F.col("df"), F.lit(0))
-                + F.coalesce(F.col("ddf"), F.lit(0))
-            ).alias("df"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/dfreq_v{delta_id}")
-    )
-    dstats = (
-        spark.read.parquet(f"{out_dir}/doclen")
-        .filter(F.col("delta_id") == delta_id)
-        .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
-        .collect()[0]
-    )
-    prev_version = meta["dfreq_version"]
-    new_meta = dict(meta)
-    new_meta.update(
-        {
-            "n_docs": int(meta["n_docs"]) + int(dstats["n"]),
-            "sum_dl": int(meta["sum_dl"]) + int(dstats["s"] or 0),
-            "dfreq_version": delta_id,
-            "last_delta_id": delta_id,
-            "delta_ids": list(meta["delta_ids"]) + [delta_id],
-        }
-    )
-    if extra_meta:
-        new_meta.update(extra_meta)
-    # re-fence at the commit point (see append_minhash_delta)
-    _check_writer_fence(out_dir, writer_token)
-    import json as _json
 
-    tmp = _lexindex_meta_path(out_dir) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        _json.dump(new_meta, fh)
-    os.replace(tmp, _lexindex_meta_path(out_dir))
-    for path in _glob.glob(os.path.join(out_dir, "dfreq_v*")):
-        try:
-            v = int(os.path.basename(path)[len("dfreq_v"):])
-        except ValueError:
-            continue
-        if v < prev_version:
-            shutil.rmtree(path, ignore_errors=True)
-    return True
+    def encode(meta: dict) -> dict:
+        # the delta MUST tokenize with the index's analyzer (resolved
+        # from the persisted artifact, never this session's model cache)
+        postings, dl = _lex_analyzer_tables(
+            spark, out_dir, meta, df.select("doc_id", "text")
+        )
+        return {
+            "postings": postings.repartition(1, "term").sortWithinPartitions(
+                "term"
+            ),
+            "doclen": dl,
+        }
+
+    def delta(table: str, delta_id: int) -> DataFrame:
+        # read-back: the committed stats describe exactly the on-disk rows
+        return spark.read.parquet(f"{out_dir}/{table}").filter(
+            F.col("delta_id") == delta_id
+        )
+
+    return _LEXICAL.append(
+        out_dir,
+        delta_id,
+        writer_token,
+        extra_meta,
+        "append_lexical_delta",
+        encode,
+        lambda meta, delta_id: _lex_restat(
+            spark,
+            out_dir,
+            meta,
+            delta("postings", delta_id),
+            delta("doclen", delta_id),
+            delta_id,
+            1,
+        ),
+    )
 
 
 def append_lexical_batch(
@@ -2974,10 +2839,9 @@ def append_lexical_batch(
 ) -> bool:
     """Admit one streaming micro-batch of documents into a persisted
     lexical index, delta-numbered from the index meta (compaction-safe
-    — see ``_batch_admission``). Returns False for a replayed batch."""
-    meta = _read_lexindex_meta(out_dir)
-    _check_lex_version(meta, out_dir)
-    skip, delta_id = _batch_admission(meta, batch_id, out_dir)
+    — see the batch-admission note). Returns False for a replayed
+    batch."""
+    skip, delta_id, _ = _LEXICAL.admit(out_dir, batch_id)
     if skip:
         return False
     return append_lexical_delta(
@@ -3016,93 +2880,27 @@ def delete_lexical_docs(
     tombstones in physically.
 
     Returns {"n_docs_deleted", "delta_id" (or None)}."""
-    import glob as _glob
-    import os
-    import shutil
 
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_lexindex_meta(out_dir)
-    _check_lex_version(meta, out_dir)
-    committed = meta["delta_ids"]
-    doclen = (
-        spark.read.parquet(f"{out_dir}/doclen")
-        .filter(F.col("delta_id").isin(committed))
-        .drop("delta_id")
-    )
-    prior = _committed_tombstones(spark, out_dir, meta, "doc_id")
-    active = _minus_tombstones(
-        doclen.select("doc_id"), prior, "doc_id"
-    ).join(drop_ids.select("doc_id").distinct(), "doc_id", "left_semi")
-    if active.limit(1).count() == 0:
-        return {"n_docs_deleted": 0, "delta_id": None}
-    new_id = meta["last_delta_id"] + 1
-    _write_tombstone_partition(active, out_dir, new_id, "doc_id")
-    # read-back discipline: every decrement below derives from the
-    # PERSISTED tombstone partition, so the committed pointer
-    # describes exactly the on-disk state
-    persisted = (
-        spark.read.parquet(f"{out_dir}/{TOMBSTONES_SUBDIR}")
-        .filter(F.col("delta_id") == new_id)
-        .select("doc_id")
-    )
-    n_deleted = persisted.count()
-    dropped_df = (
-        spark.read.parquet(f"{out_dir}/postings")
-        .filter(F.col("delta_id").isin(committed))
-        .join(persisted, "doc_id", "left_semi")
-        .groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("ddf"))
-    )
-    old_dfreq = spark.read.parquet(
-        f"{out_dir}/dfreq_v{meta['dfreq_version']}"
-    )
-    (
-        old_dfreq.join(dropped_df, "term", "full_outer")
-        .select(
-            "term",
-            (
-                F.coalesce(F.col("df"), F.lit(0))
-                - F.coalesce(F.col("ddf"), F.lit(0))
-            ).alias("df"),
-        )
-        .filter(F.col("df") > 0)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/dfreq_v{new_id}")
-    )
-    dstats = (
-        doclen.join(persisted, "doc_id", "left_semi")
-        .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
-        .collect()[0]
-    )
-    prev_version = meta["dfreq_version"]
-    new_meta = dict(meta)
-    new_meta.update(
-        {
-            "n_docs": int(meta["n_docs"]) - int(dstats["n"]),
-            "sum_dl": int(meta["sum_dl"]) - int(dstats["s"] or 0),
-            "dfreq_version": new_id,
-            "last_delta_id": new_id,
-            "delta_ids": list(committed) + [new_id],
-            "tombstone_delta_ids": meta.get("tombstone_delta_ids", [])
-            + [new_id],
-        }
-    )
-    _check_writer_fence(out_dir, writer_token)
-    import json as _json
+    def dropped(table: str, meta: dict, persisted: DataFrame) -> DataFrame:
+        return _committed_only(
+            spark.read.parquet(f"{out_dir}/{table}"), _LEXICAL.committed(meta)
+        ).join(persisted, "doc_id", "left_semi")
 
-    tmp = _lexindex_meta_path(out_dir) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        _json.dump(new_meta, fh)
-    os.replace(tmp, _lexindex_meta_path(out_dir))
-    for path in _glob.glob(os.path.join(out_dir, "dfreq_v*")):
-        try:
-            v = int(os.path.basename(path)[len("dfreq_v"):])
-        except ValueError:
-            continue
-        if v < prev_version:
-            shutil.rmtree(path, ignore_errors=True)
-    return {"n_docs_deleted": int(n_deleted), "delta_id": new_id}
+    return _LEXICAL.delete(
+        spark,
+        drop_ids,
+        out_dir,
+        writer_token,
+        restat=lambda meta, persisted, new_id: _lex_restat(
+            spark,
+            out_dir,
+            meta,
+            dropped("postings", meta, persisted),
+            dropped("doclen", meta, persisted),
+            new_id,
+            -1,
+        ),
+    )
 
 
 def compact_lexical_index(
@@ -3122,120 +2920,7 @@ def compact_lexical_index(
     invisible until the pointer flips to ``delta_ids = [last + 1]``.
 
     Returns {"files_before", "files_after", "compacted"}."""
-    import glob as _glob
-    import os
-    import shutil
-
-    if files < 1:
-        raise ValueError(f"files must be >= 1, got {files}")
-    _check_writer_fence(out_dir, writer_token)
-    meta = _read_lexindex_meta(out_dir)
-    _check_lex_version(meta, out_dir)
-    committed = meta["delta_ids"]
-    tomb_ids = meta.get("tombstone_delta_ids", [])
-    for sub in ("postings", "doclen"):
-        _sweep_orphan_partitions(f"{out_dir}/{sub}", committed)
-    _sweep_orphan_partitions(f"{out_dir}/{TOMBSTONES_SUBDIR}", tomb_ids)
-
-    def _count_files() -> int:
-        return len(
-            _glob.glob(
-                os.path.join(out_dir, "*", "**", "*.parquet"),
-                recursive=True,
-            )
-        )
-
-    before = _count_files()
-    if not committed or (
-        not tomb_ids  # pending deletions always warrant the fold
-        and len(committed) == 1
-        and not _single_delta_needs_compaction(
-            os.path.join(out_dir, "postings"), committed[0], files
-        )
-    ):
-        return {
-            "files_before": before,
-            "files_after": before,
-            "compacted": False,
-        }
-    new_id = meta["last_delta_id"] + 1
-    tombs = _committed_tombstones(spark, out_dir, meta, "doc_id")
-    (
-        _minus_tombstones(
-            spark.read.parquet(f"{out_dir}/postings")
-            .filter(F.col("delta_id").isin(committed))
-            .drop("delta_id"),
-            tombs,
-            "doc_id",
-        )
-        .repartition(files, "term")
-        .sortWithinPartitions("term")
-        .withColumn("delta_id", F.lit(new_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("delta_id")
-        .parquet(f"{out_dir}/postings")
-    )
-    (
-        _minus_tombstones(
-            spark.read.parquet(f"{out_dir}/doclen")
-            .filter(F.col("delta_id").isin(committed))
-            .drop("delta_id"),
-            tombs,
-            "doc_id",
-        )
-        .repartition(files)
-        .withColumn("delta_id", F.lit(new_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("delta_id")
-        .parquet(f"{out_dir}/doclen")
-    )
-    old_dfreq = f"{out_dir}/dfreq_v{meta['dfreq_version']}"
-    new_dfreq = f"{out_dir}/dfreq_v{new_id}"
-    shutil.rmtree(new_dfreq, ignore_errors=True)
-    shutil.copytree(old_dfreq, new_dfreq)
-    prev_dfreq_version = meta["dfreq_version"]
-    new_meta = dict(meta)  # preserve extra keys (streaming batch cursor)
-    new_meta.update(
-        {
-            "dfreq_version": new_id,
-            "last_delta_id": new_id,
-            "delta_ids": [new_id],
-            # tombstones are folded into the rewrite above
-            "tombstone_delta_ids": [],
-        }
-    )
-    _check_writer_fence(out_dir, writer_token)
-    import json as _json
-
-    tmp = _lexindex_meta_path(out_dir) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        _json.dump(new_meta, fh)
-    os.replace(tmp, _lexindex_meta_path(out_dir))
-    for sub in ("postings", "doclen"):
-        for d in committed:
-            shutil.rmtree(
-                os.path.join(out_dir, sub, f"delta_id={d}"),
-                ignore_errors=True,
-            )
-    for t in tomb_ids:
-        shutil.rmtree(
-            os.path.join(out_dir, TOMBSTONES_SUBDIR, f"delta_id={t}"),
-            ignore_errors=True,
-        )
-    for path in _glob.glob(os.path.join(out_dir, "dfreq_v*")):
-        try:
-            v = int(os.path.basename(path)[len("dfreq_v"):])
-        except ValueError:
-            continue
-        if v < prev_dfreq_version:
-            shutil.rmtree(path, ignore_errors=True)
-    return {
-        "files_before": before,
-        "files_after": _count_files(),
-        "compacted": True,
-    }
+    return _LEXICAL.compact(spark, out_dir, files, writer_token)
 
 
 def read_lexical_index(spark: SparkSession, out_dir: str):
@@ -3243,27 +2928,13 @@ def read_lexical_index(spark: SparkSession, out_dir: str):
     The postings/doclen scans are pruned to exactly the
     pointer-committed delta ids, so partitions from a crashed append
     stay invisible (same reader contract as ``read_minhash_index``)."""
-    meta = _read_lexindex_meta(out_dir)
-    _check_lex_version(meta, out_dir)
-    committed = meta["delta_ids"]
-    tombs = _committed_tombstones(spark, out_dir, meta, "doc_id")
-    postings = _minus_tombstones(
-        spark.read.parquet(f"{out_dir}/postings")
-        .filter(F.col("delta_id").isin(committed))
-        .drop("delta_id"),
-        tombs,
-        "doc_id",
-    )
-    doclen = _minus_tombstones(
-        spark.read.parquet(f"{out_dir}/doclen")
-        .filter(F.col("delta_id").isin(committed))
-        .drop("delta_id"),
-        tombs,
-        "doc_id",
-    )
+    meta = _LEXICAL.load(out_dir)
+    postings, doclen = _LEXICAL.rows(spark, out_dir, meta)
     # dfreq and the meta counters were decremented at delete time, so
     # this snapshot is exactly the rebuild-on-survivors view
-    dfreq = spark.read.parquet(f"{out_dir}/dfreq_v{meta['dfreq_version']}")
+    dfreq = spark.read.parquet(
+        _LEXICAL.stats_dir(out_dir, meta["dfreq_version"])
+    )
     return postings, doclen, dfreq, meta
 
 

@@ -128,11 +128,7 @@ def start_streaming_dedup_against_index(
         return spark.read.parquet(corpus_store_dir).select("doc_id", "text")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sinks import (
-            _batch_admission,
-            _read_index_meta,
-            append_minhash_batch,
-        )
+        from ..sinks import admit_index_batch, append_minhash_batch
 
         # run the admission cursor check FIRST, before any pair output
         # is computed or written: a deep cursor mismatch (fresh
@@ -142,7 +138,9 @@ def start_streaming_dedup_against_index(
         # in append_minhash_batch would leave corrupted pair output for
         # the batch with the stream wedged.
         if extend_index:
-            _batch_admission(_read_index_meta(index_dir), batch_id, index_dir)
+            replaying, _, meta = admit_index_batch(
+                "minhash", index_dir, batch_id
+            )
 
         # doc_id-dedup the lookup union: a streamed doc_id that already
         # exists in the index corpus (re-ingest / replay of an indexed
@@ -169,8 +167,6 @@ def start_streaming_dedup_against_index(
         # loudly in read_minhash_index, never silently.)
         pin = None
         if extend_index:
-            meta = _read_index_meta(index_dir)
-            replaying = batch_id <= meta.get("last_batch_id", -1)
             pin = (
                 meta["last_delta_id"] - 1
                 if replaying

@@ -5,6 +5,8 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
+
 from flink_kafka_replicator_spark.io import load_table
 from flink_kafka_replicator_spark.plans import formatted_plan
 from flink_kafka_replicator_spark.sinks import (
@@ -763,3 +765,161 @@ def test_jsonl_text_and_binary_sources(spark, tmp_path):
     )
     meta = multimodal.decode_image_meta(staged, use_fake_codec=False).collect()
     assert (meta[0].width, meta[0].height, meta[0].format) == (64, 32, "png")
+
+
+def test_write_lexical_index_rejects_analyzer_before_retracting(
+    spark, sf_dir, tmp_path
+):
+    """A rebuild call with an unknown analyzer must fail BEFORE it
+    retracts the pointer: the live index keeps serving the same rows
+    instead of becoming "no lexical index"."""
+    import pytest
+
+    from flink_kafka_replicator_spark.sinks import (
+        bm25_search_from_index,
+        write_lexical_index,
+    )
+
+    ix = str(tmp_path / "lex")
+    write_lexical_index(spark, sf_dir, ix)
+    words = (
+        load_table(spark, sf_dir, "documents").orderBy("doc_id").first().text
+    ).split(" ")[:3]
+    q = spark.createDataFrame([(1, words)], "qid int, terms array<string>")
+
+    def served():
+        return sorted(
+            tuple(r) for r in bm25_search_from_index(spark, q, ix).collect()
+        )
+
+    before = served()
+    assert before
+    with pytest.raises(ValueError, match="unknown lexical analyzer"):
+        write_lexical_index(spark, sf_dir, ix, analyzer="typo")
+    assert served() == before
+
+
+def _protocol_family(spark, sf_dir, kind):
+    """(meta file, build, append, delete, compact, read) for one index
+    family over a base (id % 3 == 0) and a batch (id % 3 == 1)."""
+    from pyspark.sql import functions as F
+
+    from flink_kafka_replicator_spark import sinks
+
+    if kind == "vector":
+        rows = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        id_col = "vec_id"
+    else:
+        rows = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        id_col = "doc_id"
+    base = rows.filter(F.col(id_col) % 3 == 0)
+    batch = rows.filter(F.col(id_col) % 3 == 1)
+
+    def ids(values):
+        return spark.createDataFrame(
+            [(v,) for v in values], f"{id_col} bigint"
+        )
+
+    def snap(frames):
+        return tuple(
+            frozenset(tuple(r) for r in f.collect()) for f in frames
+        )
+
+    if kind == "minhash":
+        return (
+            sinks.INDEX_META_FILE,
+            lambda ix: sinks.write_minhash_index(base, ix),
+            lambda ix, d: sinks.append_minhash_delta(batch, ix, d),
+            lambda ix, v: sinks.delete_minhash_docs(spark, ids(v), ix),
+            lambda ix: sinks.compact_minhash_index(spark, ix),
+            lambda ix: snap(sinks.read_minhash_index(spark, ix)),
+        )
+    if kind == "vector":
+        return (
+            sinks.VINDEX_META_FILE,
+            lambda ix: sinks.write_vector_index(spark, sf_dir, ix, df=base),
+            lambda ix, d: sinks.append_vector_delta(spark, batch, ix, d),
+            lambda ix, v: sinks.delete_vector_docs(spark, ids(v), ix),
+            lambda ix: sinks.compact_vector_index(spark, ix),
+            lambda ix: snap(sinks.read_vector_index(spark, ix)[1::2]),
+        )
+    return (
+        sinks.LEXINDEX_META_FILE,
+        lambda ix: sinks.write_lexical_index(spark, sf_dir, ix, df=base),
+        lambda ix, d: sinks.append_lexical_delta(batch, ix, d),
+        lambda ix, v: sinks.delete_lexical_docs(spark, ids(v), ix),
+        lambda ix: sinks.compact_lexical_index(spark, ix),
+        lambda ix: snap(sinks.read_lexical_index(spark, ix)[:3]),
+    )
+
+
+
+@pytest.mark.parametrize("kind", ["minhash", "vector", "lexical"])
+def test_delta_log_protocol(spark, sf_dir, tmp_path, monkeypatch, kind):
+    """The one commit protocol every persisted index family shares:
+    contiguous delta ids (skip raises, replay is a no-op), a crash at
+    the pointer commit leaves served rows unchanged and the retry
+    commits, a no-op delete claims no id, compaction folds a tombstone
+    in without changing reads, and every pointer commit renames its
+    own temp file from inside the index dir."""
+    import json
+
+    meta_file, build, append, delete, compact, read = _protocol_family(
+        spark, sf_dir, kind
+    )
+    ix = str(tmp_path / kind)
+    meta_path = os.path.join(ix, meta_file)
+    real_replace = os.replace
+    pointer_srcs = []
+
+    def crash(src, dst):
+        if str(dst) == meta_path:
+            raise RuntimeError("injected crash at the pointer commit")
+        return real_replace(src, dst)
+
+    def record(src, dst):
+        if str(dst) == meta_path:
+            pointer_srcs.append(str(src))
+        return real_replace(src, dst)
+
+    def meta():
+        with open(meta_path, encoding="utf-8") as fh:
+            return json.load(fh)
+
+    build(ix)
+    with pytest.raises(ValueError, match="contiguous"):
+        append(ix, 2)
+    base_rows = read(ix)
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        append(ix, 1)
+    monkeypatch.setattr(os, "replace", record)
+    assert read(ix) == base_rows, "a crashed commit changed served rows"
+    assert meta()["delta_ids"] == [0]
+    assert append(ix, 1) is True
+    assert append(ix, 1) is False
+    appended = read(ix)
+    assert appended != base_rows
+
+    unchanged = meta()
+    assert delete(ix, [-1]) == {"n_docs_deleted": 0, "delta_id": None}
+    assert meta() == unchanged, "a no-op delete claimed a delta id"
+
+    res = delete(ix, [1, 4, 7])
+    assert res["delta_id"] == 2 and res["n_docs_deleted"] > 0
+    deleted = read(ix)
+    assert deleted != appended
+    assert compact(ix)["compacted"] is True
+    m = meta()
+    assert (m["delta_ids"], m["tombstone_delta_ids"]) == ([3], [])
+    assert not os.path.isdir(os.path.join(ix, "tombstones", "delta_id=2"))
+    assert read(ix) == deleted, "compaction changed the committed view"
+
+    # append, delete and compact each committed through its own temp
+    # file inside the index dir
+    assert len(pointer_srcs) == 3, pointer_srcs
+    assert len(set(pointer_srcs)) == 3, pointer_srcs
+    assert all(os.path.dirname(s) == ix for s in pointer_srcs)
