@@ -17,6 +17,7 @@ import shutil
 import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -530,6 +531,38 @@ def _merge_additive(
     return merged if sign > 0 else merged.filter(F.col(col) > 0)
 
 
+class _Snapshot:
+    """One committed index version, resolved: its validated meta and
+    its committed frames (lazy plans, not data)."""
+
+    def __init__(self, meta: dict, frames: tuple):
+        self.meta, self.frames = meta, frames
+
+
+class _VectorSnapshot(_Snapshot):
+    @cached_property
+    def cents(self) -> list[tuple[int, list[float], float]]:
+        """The driver-side centroid list, collected on first use and
+        held with the version."""
+        return _cents_of(self.frames[0])
+
+
+# (application id, absolute pointer path) -> (pointer identity, _Snapshot)
+_SNAPSHOTS: dict = {}
+
+
+def _pointer_id(path: str) -> tuple | None:
+    """(inode, mtime, size, bytes) of the pointer file, taken from one
+    open file so the bytes belong to the stat beside them; None when
+    there is no pointer."""
+    try:
+        with open(path, "rb") as fh:
+            st = os.fstat(fh.fileno())
+            return st.st_ino, st.st_mtime_ns, st.st_size, fh.read()
+    except FileNotFoundError:
+        return None
+
+
 @dataclass(frozen=True)
 class _DeltaLog:
     """One index family's delta-log spec, and the protocol steps every
@@ -632,6 +665,36 @@ class _DeltaLog:
             )
             for t in tables or self.tables
         ]
+
+    def snapshot(
+        self,
+        spark: SparkSession,
+        out_dir: str,
+        resolve: Callable[[dict], _Snapshot],
+    ) -> _Snapshot:
+        """``resolve(meta)`` of the committed version, memoized per
+        pointer file. The key is the pointer's identity: inode, mtime,
+        size and bytes. Every commit renames a fresh temp file into
+        place, so any commit from any process changes it, for one
+        small read per call. The bytes alone cannot be the key: a base
+        rebuild over the same inputs writes byte-identical meta while
+        replacing every file. The stat alone is not enough where
+        timestamps are coarse and a freed inode is reused. A false hit
+        needs both: identical bytes from a rebuild that lands in the
+        same timestamp tick on the same reused inode. A pointer that
+        moved while resolving is served but not memoized."""
+        from .functions import pipeline_queries as pq
+
+        path = os.path.abspath(self.path(out_dir))
+        key = (spark.sparkContext.applicationId, path)
+        before = _pointer_id(path)
+        hit = _SNAPSHOTS.get(key)
+        if hit is not None and hit[0] == before:
+            return hit[1]
+        snap = resolve(self.load(out_dir))
+        if before is not None and _pointer_id(path) == before:
+            pq._cache_put(_SNAPSHOTS, key, (before, snap))
+        return snap
 
     @staticmethod
     def claim(meta: dict, delta_id: int, verb: str) -> bool:
@@ -1736,22 +1799,27 @@ def compact_vector_index(
     return _VECTOR.compact(spark, out_dir, files, writer_token)
 
 
-def _vector_snapshot(
-    spark: SparkSession, out_dir: str
-) -> tuple[dict, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """(meta, centroids, postings, pq_codebook, pq_codes) from ONE
-    validated pointer read — every vector serving path resolves its
+def _vector_snapshot(spark: SparkSession, out_dir: str) -> _VectorSnapshot:
+    """The committed vector index version: frames (centroids,
+    postings, pq_codebook, pq_codes) and, on first use, the collected
+    centroid list, resolved from ONE validated pointer read and held
+    until the next commit — every vector serving path resolves its
     frames and its meta from the same committed version."""
-    meta = _VECTOR.load(out_dir)
-    postings, codes = _VECTOR.rows(spark, out_dir, meta)
-    c_sub, cb_sub = _vindex_model_dirs(meta)
-    return (
-        meta,
-        spark.read.parquet(f"{out_dir}/{c_sub}"),
-        postings,
-        spark.read.parquet(f"{out_dir}/{cb_sub}"),
-        codes,
-    )
+
+    def resolve(meta: dict) -> _VectorSnapshot:
+        postings, codes = _VECTOR.rows(spark, out_dir, meta)
+        c_sub, cb_sub = _vindex_model_dirs(meta)
+        return _VectorSnapshot(
+            meta,
+            (
+                spark.read.parquet(f"{out_dir}/{c_sub}"),
+                postings,
+                spark.read.parquet(f"{out_dir}/{cb_sub}"),
+                codes,
+            ),
+        )
+
+    return _VECTOR.snapshot(spark, out_dir, resolve)
 
 
 def read_vector_index(
@@ -1762,7 +1830,7 @@ def read_vector_index(
     to committed delta partitions), after validating its geometry
     against the running engine's constants — a quantizer-geometry
     mismatch must fail loudly, not return silently-wrong neighbors."""
-    return _vector_snapshot(spark, out_dir)[1:]
+    return _vector_snapshot(spark, out_dir).frames
 
 
 def _encode_vectors(
@@ -1979,7 +2047,7 @@ def index_cell_histogram(spark: SparkSession, out_dir: str) -> DataFrame:
 
     Returns (cid, n_vectors, share, skew_vs_mean) per committed cell —
     one postings aggregate, no codes/vectors touched."""
-    postings = _vector_snapshot(spark, out_dir)[2]
+    postings = _vector_snapshot(spark, out_dir).frames[1]
     hist = postings.groupBy("cid").agg(
         F.count("*").cast("bigint").alias("n_vectors")
     )
@@ -2039,7 +2107,7 @@ def recall_drift_report(
     from .functions.similarity import as_double, cosine
 
     snap = _vector_snapshot(spark, out_dir)
-    e, _ = _vindex_survivor_embeddings(out_dir, exact_df, snap[2])
+    e, _ = _vindex_survivor_embeddings(out_dir, exact_df, snap.frames[1])
     qs = (
         e.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(sample)
@@ -2154,12 +2222,11 @@ def knn_ivf_pq_from_index(
     pytest pins that identity against ``knn_pq_adc``."""
     from .functions import pipeline_queries as pq
 
-    meta, centroids, postings, codebook, codes = _vector_snapshot(
-        spark, out_dir
-    )
-    cents = _cents_of(centroids)
+    snap = _vector_snapshot(spark, out_dir)
+    _, postings, codebook, codes = snap.frames
+    cents = snap.cents
     if n_probe is None:
-        n_probe = meta["ivf_n_probe"]
+        n_probe = snap.meta["ivf_n_probe"]
     if n_probe < 1:
         raise ValueError(f"n_probe must be >= 1, got {n_probe}")
     probe_ids = pq._probe_nearest(cents, n_probe=n_probe)
@@ -2203,17 +2270,18 @@ def knn_batch_search_from_index(
 def _knn_batch_search(
     spark: SparkSession,
     queries_df: DataFrame,
-    snap: tuple,
+    snap: _VectorSnapshot,
     k: int,
     n_probe: int | None,
 ) -> DataFrame:
     """:func:`knn_batch_search_from_index` over an already-resolved
-    :func:`_vector_snapshot`."""
+    :func:`_vector_snapshot`; ``queries_df`` is read twice, so a
+    caller whose batch is costly to rescan pins it first."""
     from pyspark.sql import Window
 
     from .functions import pipeline_queries as pq
 
-    meta, centroids, postings, codebook, codes = snap
+    meta, (centroids, postings, codebook, codes) = snap.meta, snap.frames
     if n_probe is None:
         n_probe = meta["ivf_n_probe"]
     if n_probe < 1:
@@ -2227,7 +2295,7 @@ def _knn_batch_search(
         F.col("d").asc(), F.col("cid").asc()
     )
     probes = (
-        pq._rowwise_candidates(q, centroids)
+        pq._rowwise_candidates(q, centroids, dim=len(snap.cents[0][1]))
         .withColumn("rn", F.row_number().over(wc))
         .filter(F.col("rn") <= n_probe)
         .select(F.col("vec_id").alias("qid"), "cid")
@@ -2923,19 +2991,29 @@ def compact_lexical_index(
     return _LEXICAL.compact(spark, out_dir, files, writer_token)
 
 
+def _lexical_snapshot(spark: SparkSession, out_dir: str) -> _Snapshot:
+    """The committed lexical index version: frames (postings, doclen,
+    dfreq), held until the next commit."""
+
+    def resolve(meta: dict) -> _Snapshot:
+        postings, doclen = _LEXICAL.rows(spark, out_dir, meta)
+        # dfreq and the meta counters were decremented at delete time,
+        # so this snapshot is exactly the rebuild-on-survivors view
+        dfreq = spark.read.parquet(
+            _LEXICAL.stats_dir(out_dir, meta["dfreq_version"])
+        )
+        return _Snapshot(meta, (postings, doclen, dfreq))
+
+    return _LEXICAL.snapshot(spark, out_dir, resolve)
+
+
 def read_lexical_index(spark: SparkSession, out_dir: str):
     """(postings, doclen, dfreq, meta) from a committed lexical index.
     The postings/doclen scans are pruned to exactly the
     pointer-committed delta ids, so partitions from a crashed append
     stay invisible (same reader contract as ``read_minhash_index``)."""
-    meta = _LEXICAL.load(out_dir)
-    postings, doclen = _LEXICAL.rows(spark, out_dir, meta)
-    # dfreq and the meta counters were decremented at delete time, so
-    # this snapshot is exactly the rebuild-on-survivors view
-    dfreq = spark.read.parquet(
-        _LEXICAL.stats_dir(out_dir, meta["dfreq_version"])
-    )
-    return postings, doclen, dfreq, meta
+    snap = _lexical_snapshot(spark, out_dir)
+    return (*snap.frames, dict(snap.meta))
 
 
 def bm25_search_from_index(
@@ -3051,15 +3129,18 @@ def hybrid_search_from_indexes(
     from pyspark.sql import Window
 
     from .functions import pipeline_queries as pq
+    from .io import materialize_small
 
     if k is None:
         k = pq.HYBRID_TOP_K
+    # the two legs read the batch four times: pin it to scan it once
+    q = materialize_small(queries_df.select("qid", "terms", "embedding"))
     lex = bm25_search_from_index(
-        spark, queries_df.select("qid", "terms"), lex_dir, k=lex_k
+        spark, q.select("qid", "terms"), lex_dir, k=lex_k
     ).select("qid", "doc_id", F.col("rank").alias("lex_rank"))
     vec = knn_batch_search_refined_from_index(
         spark,
-        queries_df.select("qid", "embedding"),
+        q.select("qid", "embedding"),
         vec_dir,
         exact_df,
         k=vec_k,

@@ -8,11 +8,12 @@ appended as batch-keyed partitions.
 
 Exactly-once on the RESULT side is the family recipe: streaming
 checkpoint + dynamic overwrite of each batch's own ``batch_id=K``
-partition, so replays rewrite rather than duplicate. Both inputs are
-static committed artifacts per batch (the lexical index rebuilds
-rather than patches; the vector index is read at its pointer-committed
-state), and the lexical fold + rounded-rank legs are deterministic, so
-a replayed batch writes byte-identical answers.
+partition, so replays rewrite rather than duplicate. Both indexes are
+read at their pointer-committed state per batch (each takes appends
+as committed deltas: ``append_lexical_batch`` and
+``append_vector_batch``), and the lexical fold + rounded-rank legs
+are deterministic, so a replayed batch over an unchanged index writes
+byte-identical answers.
 
 At scale: per batch, work = matched postings rows (lexical) + probed
 fraction of codes (+ shortlist point-fetches) (vector) + RRF over the

@@ -923,3 +923,205 @@ def test_delta_log_protocol(spark, sf_dir, tmp_path, monkeypatch, kind):
     assert len(pointer_srcs) == 3, pointer_srcs
     assert len(set(pointer_srcs)) == 3, pointer_srcs
     assert all(os.path.dirname(s) == ix for s in pointer_srcs)
+
+
+def _hybrid_fixture(spark, sf_dir, tmp_path):
+    """Both indexes' dirs, a build function over the base ids (id % 3 == 0)
+    or, with ``full``, the base and batch ids, the batch (id % 3 == 1)
+    to append, 6 queries carrying batch and base documents' own words
+    and vectors, and a serve function answering them."""
+    from pyspark.sql import functions as F
+
+    from flink_kafka_replicator_spark import sinks
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    vecs = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding"
+    )
+    text = {
+        r.doc_id: r.text for r in docs.filter(F.col("doc_id") < 9).collect()
+    }
+    emb = {
+        r.vec_id: [float(x) for x in r.embedding]
+        for r in vecs.filter(F.col("vec_id") < 9).collect()
+    }
+    q = spark.createDataFrame(
+        [(i, text[i].split(" ")[:4], emb[i]) for i in (0, 1, 3, 4, 6, 7)],
+        "qid bigint, terms array<string>, embedding array<float>",
+    )
+    ix = {"lexical": str(tmp_path / "lex"), "vector": str(tmp_path / "vec")}
+    base = {
+        "lexical": docs.filter(F.col("doc_id") % 3 == 0),
+        "vector": vecs.filter(F.col("vec_id") % 3 == 0),
+    }
+    batch = {
+        "lexical": docs.filter(F.col("doc_id") % 3 == 1),
+        "vector": vecs.filter(F.col("vec_id") % 3 == 1),
+    }
+
+    def build(kind, full=False):
+        df = base[kind].unionByName(batch[kind]) if full else base[kind]
+        if kind == "lexical":
+            sinks.write_lexical_index(spark, sf_dir, ix[kind], df=df)
+        else:
+            sinks.write_vector_index(spark, sf_dir, ix[kind], df=df)
+
+    def serve():
+        return sorted(
+            tuple(r)
+            for r in sinks.hybrid_search_from_indexes(
+                spark,
+                q,
+                ix["lexical"],
+                ix["vector"],
+                vecs,
+                n_probe=16,
+            ).collect()
+        )
+
+    return ix, batch, build, q, serve
+
+
+@pytest.mark.parametrize("kind", ["vector", "lexical"])
+def test_served_snapshot_follows_every_commit(spark, sf_dir, tmp_path, kind):
+    """A warm serving request resolves each index from its memoized
+    snapshot, and must still answer exactly as a fresh read of the
+    committed state after every kind of commit: a base rebuild over
+    identical inputs (same meta bytes, every file replaced), an
+    in-process append, a delete, and a pointer swapped by another
+    writer."""
+    import json
+
+    from flink_kafka_replicator_spark import sinks
+
+    ix, batch, build, _, serve = _hybrid_fixture(spark, sf_dir, tmp_path)
+    # the other index holds the batch too, so batch documents reach
+    # the fused top-k once this kind's leg serves them
+    build("vector", full=kind == "lexical")
+    build("lexical", full=kind == "vector")
+    log = sinks._index_log(kind)
+    meta_path = log.path(ix[kind])
+    pos = 3 if kind == "vector" else 2  # vec_rank / lex_rank
+
+    def fresh():
+        sinks._SNAPSHOTS.clear()
+        return serve()
+
+    def leg_ids(answers):  # the batch ids this kind's leg served
+        return {
+            r[1] for r in answers if r[pos] is not None and r[1] % 3 == 1
+        }
+
+    def meta_bytes():
+        with open(meta_path, "rb") as fh:
+            return fh.read()
+
+    rows = fresh()
+    assert not leg_ids(rows)
+    base_meta = meta_bytes()
+    build(kind)  # a content-keyed memo would list deleted files
+    assert meta_bytes() == base_meta
+    assert serve() == rows
+
+    if kind == "lexical":
+        sinks.append_lexical_delta(batch[kind], ix[kind], 1)
+    else:
+        sinks.append_vector_delta(spark, batch[kind], ix[kind], 1)
+    appended = serve()
+    assert appended == fresh()
+    gone = leg_ids(appended)
+    assert gone, "appended rows are not served"
+    appended_meta = json.loads(meta_bytes())
+
+    drop = spark.createDataFrame(
+        [(i,) for i in sorted(gone)], f"{log.id_col} bigint"
+    )
+    if kind == "lexical":
+        sinks.delete_lexical_docs(spark, drop, ix[kind])
+    else:
+        sinks.delete_vector_docs(spark, drop, ix[kind])
+    deleted = serve()
+    assert deleted == fresh()
+    assert not leg_ids(deleted) & gone, "tombstoned ids are served"
+
+    # another writer's commit: the pointer moves back to the appended
+    # state, whose partitions and stats version are still on disk
+    sinks._swap_pointer(meta_path, appended_meta)
+    assert serve() == appended
+
+
+def test_warm_hybrid_build_pins_queries_and_reads_no_schema(
+    spark, sf_dir, tmp_path
+):
+    """Over an unchanged index, building a hybrid request runs one job
+    (the query-batch pin): both index snapshots are resident. Running
+    it lists no index table (no parquet schema job) and reads no
+    centroid row to learn the vector width (no first job)."""
+    from flink_kafka_replicator_spark import sinks
+
+    ix, _, build, q, serve = _hybrid_fixture(spark, sf_dir, tmp_path)
+    build("lexical")
+    build("vector")
+    serve()  # resolves both snapshots
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_in(gid, fn):
+        sc.setJobGroup(gid, "warm hybrid job budget")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("hybrid-budget-idle", "between guarded calls")
+        return out, tracker.getJobIdsForGroup(gid)
+
+    answers, build_jobs = jobs_in(
+        "hybrid-build",
+        lambda: sinks.hybrid_search_from_indexes(
+            spark, q, ix["lexical"], ix["vector"], e
+        ),
+    )
+    assert len(build_jobs) == 1, build_jobs
+    _, run_jobs = jobs_in("hybrid-run", answers.collect)
+    names = [
+        tracker.getStageInfo(s).name
+        for j in run_jobs
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    ]
+    assert names
+    assert not [
+        n for n in names if n.startswith(("parquet at", "first at"))
+    ], names
+
+
+def test_batch_probes_follow_the_index_width(spark, sf_dir, tmp_path):
+    """Batch search probes on the index's own embedding width, so a
+    query that is an indexed vector probes the cell it is posted in.
+    Here the width is 96: the last 32 dims are a scaled copy of the
+    first 32, so a probe over only the PQ width (64) picks other
+    cells than the full-width assignment did."""
+    from pyspark.sql import functions as F
+
+    from flink_kafka_replicator_spark import sinks
+
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.concat(
+            "embedding",
+            F.transform(F.slice("embedding", 1, 32), lambda x: x * 10),
+        )
+        .cast("array<float>")
+        .alias("embedding"),
+    )
+    ix = str(tmp_path / "vec")
+    sinks.write_vector_index_from_df(spark, e, ix, kmeans_iters=2)
+    postings = sinks.read_vector_index(spark, ix)[1].select("vec_id", "cid")
+    q = e.filter(F.col("vec_id") % 7 == 0).withColumnRenamed("vec_id", "qid")
+    got = sinks.knn_batch_search_from_index(spark, q, ix, k=5, n_probe=1)
+    own = postings.select(
+        F.col("vec_id").alias("qid"), F.col("cid").alias("qcid")
+    )
+    rows = got.join(own, "qid").join(postings, "vec_id").collect()
+    assert rows
+    assert all(r.cid == r.qcid for r in rows), "probed a foreign cell"
