@@ -1080,7 +1080,9 @@ def corpus_mix_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # share denominator as a scalar subquery (round 14): replaces the
     # partitionBy(lit(1)) window — no SinglePartition exchange; the
-    # total's agg reuses the lang-count exchange (ReusedExchange)
+    # total's agg reuses the lang-count exchange only at runtime
+    # (MergeScalarSubqueries or the AQE stage cache; the static plan
+    # shows no ReusedExchange)
     tot = counts.agg(F.sum("n").alias("t"))
     shares = counts.select(
         "lang",

@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import memo
 from .session import prepare
 
 TABLES = (
@@ -33,13 +34,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# (session appId, sf_dir, table) → DataFrame. A DataFrame is an immutable
-# plan holder, so reuse is safe; the win is skipping the per-call file
-# listing + footer read (~0.1 s), which otherwise taxes every one of the
-# 70+ registry queries. The driver's test tables are static per run.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table; pins session confs needed for oracle parity.
 
@@ -60,10 +54,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     prepare(spark)
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _read_table(spark, sf_dir, name)
+
+
+# A DataFrame is an immutable plan holder, so reuse is safe; the win is
+# skipping the per-call file listing + footer read (~0.1 s), which
+# otherwise taxes every one of the 70+ registry queries.
+@memo.dataset
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(table_path(sf_dir, name))
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
@@ -75,7 +73,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(field.dataType, TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_CACHE[key] = df
     return df
 
 

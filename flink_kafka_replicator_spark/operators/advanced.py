@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..io import load_table, materialize_small, trunc_ntz
 
 TOPK_PER_GROUP = 3
@@ -193,10 +194,18 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (session appId, sf_dir) → pinned hourly rollup for gap_fill_locf.
-# The pin is an EAGER checkpoint, so without a memo every query build
-# would re-run its jobs (tests/test_build_guard.py).
-_HOURLY_CACHE: dict[tuple[str, str], DataFrame] = {}
+# The pinned hourly rollup for gap_fill_locf. The pin is an EAGER
+# checkpoint, so without a memo every query build would re-run its jobs
+# (tests/test_build_guard.py).
+@memo.dataset
+def _hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    return materialize_small(
+        ev.groupBy("event_type", trunc_ntz("hour", "ts").alias("h")).agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
+        )
+    )
 
 
 def gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,21 +222,7 @@ def gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline_queries; uses the reliable checkpoint dir when one is
     configured).
     """
-    import os
-
-    ck = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    hourly = _HOURLY_CACHE.get(ck)
-    if hourly is None:
-        ev = load_table(spark, sf_dir, "events")
-        hourly = materialize_small(
-            ev.groupBy("event_type", trunc_ntz("hour", "ts").alias("h")).agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
-        )
-        from ..functions.pipeline_queries import _cache_put
-
-        _cache_put(_HOURLY_CACHE, ck, hourly)
+    hourly = _hourly_rollup(spark, sf_dir)
     bounds = hourly.groupBy("event_type").agg(
         F.min("h").alias("h0"), F.max("h").alias("h1")
     )
@@ -632,7 +627,9 @@ def session_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # share denominator as a scalar subquery (round 14): replaces the
     # partitionBy(lit(1)) window — no SinglePartition exchange; the
-    # total's agg reuses the histogram exchange (ReusedExchange)
+    # total's agg reuses the histogram exchange only at runtime
+    # (MergeScalarSubqueries or the AQE stage cache; the static plan
+    # shows no ReusedExchange)
     tot = hist.agg(F.sum("n_sessions").alias("t"))
     return (
         hist

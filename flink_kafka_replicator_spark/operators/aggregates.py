@@ -666,10 +666,12 @@ def agg_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # share denominators as SCALAR SUBQUERIES (round 14): the previous
     # partitionBy(lit(1)) window parked the grouped table on one task
     # via an Exchange SinglePartition; each subquery computes its total
-    # with a partial-aggregated global agg and REUSES the groupBy
-    # exchange (ReusedExchange — verified in the committed plan), so no
-    # single-partition shuffle remains and the total reaches the main
-    # pass as a plan literal. Same exact bigint sums, same division.
+    # with a partial-aggregated global agg, so no single-partition
+    # shuffle remains and the total reaches the main pass as a plan
+    # literal. Any reuse of the groupBy exchange happens at runtime
+    # (MergeScalarSubqueries or the AQE stage cache); the committed
+    # plan shows no ReusedExchange. Same exact bigint sums, same
+    # division.
     tot_orders = agg.agg(F.sum("n_orders").alias("t"))
     tot_rev = agg.agg(F.sum("rev100").alias("t"))
     return agg.select(
@@ -774,7 +776,9 @@ def agg_order_lines_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # share denominators as scalar subqueries (round 14, the
     # agg_weekday_seasonality idiom): no SinglePartition exchange; the
-    # totals' aggs reuse the histogram's exchange (ReusedExchange)
+    # totals' aggs reuse the histogram's exchange only at runtime
+    # (MergeScalarSubqueries or the AQE stage cache; the static plan
+    # shows no ReusedExchange)
     tot_orders = hist.agg(F.sum("n_orders").alias("t"))
     tot_rev = hist.agg(F.sum("rev100").alias("t"))
     return hist.select(

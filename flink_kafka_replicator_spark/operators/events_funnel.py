@@ -658,7 +658,9 @@ def events_hourly_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # share denominator as a scalar subquery (round 14): replaces the
     # partitionBy(lit(1)) window — no SinglePartition exchange; the
-    # total's agg reuses the grid exchange (ReusedExchange)
+    # total's agg reuses the grid exchange only at runtime
+    # (MergeScalarSubqueries or the AQE stage cache; the static plan
+    # shows no ReusedExchange)
     tot = grid.agg(F.sum("n_events").alias("t"))
     return grid.select(
         "dow",
@@ -737,8 +739,9 @@ def dq_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the head reaches both consumers as a SCALAR SUBQUERY (round 14):
     # the broadcast crossJoin (a BroadcastNestedLoopJoin) and the
     # full-window max (an Exchange SinglePartition) are both gone; the
-    # head's agg reuses the per-type exchange (ReusedExchange) and the
-    # head value arrives in the recency comparisons as a plan literal.
+    # head's agg reuses the per-type exchange only at runtime
+    # (MergeScalarSubqueries or the AQE stage cache; the static plan
+    # shows no ReusedExchange), and the head value arrives in the recency comparisons as a plan literal.
     # Same integer micros arithmetic, same NULL propagation on an
     # empty stream (max over zero rows is NULL either way).
     rec = (

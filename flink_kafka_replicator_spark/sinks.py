@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.utils import AnalysisException
 
+from . import memo
+
 DEFAULT_SHARDS = 16
 
 
@@ -547,10 +549,6 @@ class _VectorSnapshot(_Snapshot):
         return _cents_of(self.frames[0])
 
 
-# (application id, absolute pointer path) -> (pointer identity, _Snapshot)
-_SNAPSHOTS: dict = {}
-
-
 def _pointer_id(path: str) -> tuple | None:
     """(inode, mtime, size, bytes) of the pointer file, taken from one
     open file so the bytes belong to the stat beside them; None when
@@ -673,7 +671,7 @@ class _DeltaLog:
         resolve: Callable[[dict], _Snapshot],
     ) -> _Snapshot:
         """``resolve(meta)`` of the committed version, memoized per
-        pointer file. The key is the pointer's identity: inode, mtime,
+        pointer file against the pointer's identity: inode, mtime,
         size and bytes. Every commit renames a fresh temp file into
         place, so any commit from any process changes it, for one
         small read per call. The bytes alone cannot be the key: a base
@@ -683,18 +681,14 @@ class _DeltaLog:
         needs both: identical bytes from a rebuild that lands in the
         same timestamp tick on the same reused inode. A pointer that
         moved while resolving is served but not memoized."""
-        from .functions import pipeline_queries as pq
-
         path = os.path.abspath(self.path(out_dir))
-        key = (spark.sparkContext.applicationId, path)
-        before = _pointer_id(path)
-        hit = _SNAPSHOTS.get(key)
-        if hit is not None and hit[0] == before:
-            return hit[1]
-        snap = resolve(self.load(out_dir))
-        if before is not None and _pointer_id(path) == before:
-            pq._cache_put(_SNAPSHOTS, key, (before, snap))
-        return snap
+        return memo.get(
+            spark,
+            "index_snapshot",
+            path,
+            lambda: _pointer_id(path),
+            lambda: resolve(self.load(out_dir)),
+        )
 
     @staticmethod
     def claim(meta: dict, delta_id: int, verb: str) -> bool:
@@ -2053,7 +2047,9 @@ def index_cell_histogram(spark: SparkSession, out_dir: str) -> DataFrame:
     )
     # totals as scalar subqueries (round 14): replaces the
     # partitionBy(lit(1)) windows — no SinglePartition exchange; both
-    # totals' aggs reuse the histogram exchange (ReusedExchange)
+    # totals' aggs reuse the histogram exchange only at runtime
+    # (MergeScalarSubqueries or the AQE stage cache; the static plan
+    # shows no ReusedExchange)
     tot = hist.agg(F.sum("n_vectors").alias("t"))
     n_cells = hist.agg(F.count("*").alias("t"))
     return hist.select(

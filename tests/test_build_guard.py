@@ -12,8 +12,8 @@ Documented allowlist — the FIRST build only: a handful of queries
 construct bounded, memoized model artifacts at build time (the IVF
 centroid / k-means / PQ code tables, the connected-components label
 table, the persisted minhash index dir — each memoized per
-(session, dataset), see functions/pipeline_queries.py `_cache_put`
-sites). The warm pass below absorbs those; the guarded second build
+(session, dataset) in the one artifact memo, see
+flink_kafka_replicator_spark/memo.py). The warm pass below absorbs those; the guarded second build
 must run ZERO jobs for every id with no exceptions — at steady state
 (artifacts persisted offline at 100 TB) query construction is free.
 
@@ -24,6 +24,8 @@ far exceeds the zero we expect).
 """
 
 from __future__ import annotations
+
+import os
 
 from flink_kafka_replicator_spark.registry import all_queries
 
@@ -54,25 +56,51 @@ def test_zero_jobs_at_query_build(spark, sf_dir):
     )
 
 
+def test_trailing_separator_reuses_warm_artifacts(spark, sf_dir):
+    """``sf_dir`` spelled with a trailing separator names the same
+    dataset: after a warm build, building a knn query through it must
+    run zero jobs (no quantizer refit at build)."""
+    sc = spark.sparkContext
+    fn = all_queries()["knn_ivf_multiprobe"]
+    fn(spark, sf_dir)
+    gid = "build-guard-trailing-separator"
+    sc.setJobGroup(gid, "zero-jobs-at-build guard")
+    try:
+        fn(spark, sf_dir.rstrip(os.sep) + os.sep)
+    finally:
+        sc.setJobGroup("build-guard-idle", "between guarded builds")
+    assert not sc.statusTracker().getJobIdsForGroup(gid)
+
+
 def test_clear_result_memos_forces_greedy_rerun(spark, sf_dir):
     """Bench-headline contract (VERDICT r13 item 2): clearing the
     result-level memos must drop exactly the collected-relation caches
     of the RESULT_MEMOIZED_IDS so a timed rep re-runs the greedy, while
     artifact memos stay warm (the zero-jobs guard above still holds for
     the SECOND build after a clear only via the artifact caches)."""
+    from flink_kafka_replicator_spark import memo
     from flink_kafka_replicator_spark.functions import pipeline_queries as pq
+
+    def entries(kind):
+        return memo._STORE.get(kind, {})
 
     qs = all_queries()
     for qid in pq.RESULT_MEMOIZED_IDS:
         assert qid in qs
         qs[qid](spark, sf_dir)  # populate result + artifact memos
-    assert pq._MMR_RESULT_CACHE and pq._MMR_BATCH_RESULT_CACHE
-    art_keys = set(pq._MMR_ART_CACHE), set(pq._MMR_BATCH_ART_CACHE)
+    assert entries("mmr_rerank") and entries("mmr_rerank_batch")
+    art_keys = (
+        set(entries("_mmr_artifacts")),
+        set(entries("_mmr_batch_artifacts")),
+    )
     pq.clear_result_memos()
-    assert not pq._MMR_RESULT_CACHE and not pq._MMR_BATCH_RESULT_CACHE
+    assert not entries("mmr_rerank") and not entries("mmr_rerank_batch")
     # artifact memos untouched — the rebuild is greedy + bounded
     # collects over warm artifacts, not a full artifact rebuild
-    assert (set(pq._MMR_ART_CACHE), set(pq._MMR_BATCH_ART_CACHE)) == art_keys
+    assert (
+        set(entries("_mmr_artifacts")),
+        set(entries("_mmr_batch_artifacts")),
+    ) == art_keys
     # rebuild reproduces the identical result rows (same greedy)
     before = {
         qid: [tuple(r) for r in qs[qid](spark, sf_dir).collect()]

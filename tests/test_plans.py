@@ -65,9 +65,9 @@ def test_regex_source_selection_pushdown(spark, sf_dir):
 def test_lsh_pipelines_have_no_cartesian_product(spark, sf_dir):
     # clear the memoized pair artifact so the assertion inspects the
     # LIVE build plan, not a collapsed scan of the cached checkpoint
-    from flink_kafka_replicator_spark.functions import pipeline_queries as pq
+    from flink_kafka_replicator_spark import memo
 
-    pq._PAIR_CACHE.clear()
+    memo.clear("_minhash_candidates_with_jaccard")
     for q in (dedup_fuzzy_minhash, sim_topk_ivf):
         plan = formatted_plan(q(spark, sf_dir))
         assert "CartesianProduct" not in plan, f"{q.__name__} regressed to cartesian"
@@ -456,12 +456,12 @@ def test_incremental_dedup_is_bipartite_equi_join(spark, sf_dir):
 def test_multiprobe_knn_stays_equi_join(spark, sf_dir):
     """Probing two cells widens the join input but must not change the
     join strategy: still an equi-join on the cell id."""
-    from flink_kafka_replicator_spark.functions import pipeline_queries as pq
+    from flink_kafka_replicator_spark import memo
     from flink_kafka_replicator_spark.functions.pipeline_queries import (
         knn_ivf_multiprobe,
     )
 
-    pq._KNN_SCORED_CACHE.clear()
+    memo.clear("_knn_incell_half")
     plan = formatted_plan(knn_ivf_multiprobe(spark, sf_dir))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "WindowGroupLimit" in plan

@@ -66,21 +66,24 @@ def test_vocab_count_memoized_per_session_dataset(spark, sf_dir, monkeypatch):
     """The gate's vocab count must run at most one job per (session,
     dataset) — a second query build reuses the memoized count
     (the zero-jobs-at-build contract, see test_build_guard)."""
+    from flink_kafka_replicator_spark import memo
+
     key = (
         spark.sparkContext.applicationId,
-        __import__("os").path.normpath(sf_dir),
+        (__import__("os").path.normpath(sf_dir),),
     )
-    pq._VOCAB_N_CACHE.pop(key, None)
+    vocab_n = memo._STORE.setdefault("_vocab_n", {})
+    vocab_n.pop(key, None)
     pq.doc_unigram_logprob(spark, sf_dir)
-    assert key in pq._VOCAB_N_CACHE
-    n_before = pq._VOCAB_N_CACHE[key]
+    assert key in vocab_n
+    n_before = vocab_n[key][1]
 
     tracker = spark.sparkContext.statusTracker()
     jobs_before = len(tracker.getJobIdsForGroup(None) or [])
     pq.quality_perplexity_buckets(spark, sf_dir)  # build only — no action
     jobs_after = len(tracker.getJobIdsForGroup(None) or [])
     assert jobs_after == jobs_before, "query build re-counted the vocab"
-    assert pq._VOCAB_N_CACHE[key] == n_before
+    assert vocab_n[key][1] == n_before
 
 
 def test_vocab_gate_default_path_still_broadcasts(spark, sf_dir):

@@ -120,12 +120,8 @@ def test_mmr_driver_greedy_matches_plan(spark):
         pipeline_queries as pq,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.normpath(SF_DIR),
-    )
     pq.mmr_rerank_batch(spark, SF_DIR).collect()  # builds artifacts
-    short, sims = pq._MMR_BATCH_ART_CACHE[key]
+    short, sims = pq._mmr_batch_artifacts(spark, SF_DIR)  # memo hit
     drv = {
         tuple(r) for r in pq._mmr_greedy_batch(short, sims).collect()
     }

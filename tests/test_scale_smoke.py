@@ -14,6 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 from tests.streamutil import drain
 
+from flink_kafka_replicator_spark import memo
+
 pytestmark = pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_SCALE_TEST") != "1",
     reason="scale smoke is opt-in (SPARK_GRAFT_SCALE_TEST=1)",
@@ -77,16 +79,16 @@ def _clear_artifact_caches():
     memoized index artifacts (minhash pair table, CC labels, knn
     assignment) so a prior test's warm cache can't make the small-scale
     denominator ~0 and fail the big-side bound spuriously."""
-    from flink_kafka_replicator_spark.functions import pipeline_queries as pq
-
-    pq._PAIR_CACHE.clear()
-    pq._CC_LABEL_CACHE.clear()
-    pq._KNN_ASSIGN_CACHE.clear()
-    pq._KNN_VEC_CACHE.clear()
-    pq._KNN_SCORED_CACHE.clear()
-    pq._BAND_CACHE.clear()
-    pq._PQ_CODES_CACHE.clear()
-    pq._PR_CACHE.clear()
+    memo.clear(
+        "_minhash_candidates_with_jaccard",
+        "_cc_labels",
+        "_knn_assignment",
+        "_knn_vectors",
+        "_knn_incell_half",
+        "_banded_documents",
+        "_pq_codes",
+        "_pagerank_ranks",
+    )
 
 
 def test_minhash_scales_linearly(spark, big_dir):
@@ -416,8 +418,8 @@ def test_quality_classifier_at_100x_linear(spark, big100_dir, monkeypatch):
     # bound below any honest 100x cold-fit time. Fresh cache dicts +
     # the build inside the timer give both sides identical cold-start
     # semantics (the 100x side below already times its build).
-    monkeypatch.setattr(pq, "_QC_FIT_CACHE", {})
-    monkeypatch.setattr(pq, "_QC_FEATURES_CACHE", {})
+    monkeypatch.setitem(memo._STORE, "_qc_fit", {})
+    monkeypatch.setitem(memo._STORE, "_qc_features", {})
     t0 = time.perf_counter()
     pq.quality_classifier_train(spark, SRC).count()
     t_small = time.perf_counter() - t0
@@ -1015,7 +1017,7 @@ def test_bpe_train_at_10x_vocab_bound(spark, big_dir):
         pipeline_queries as pq,
     )
 
-    pq._BPE_MERGE_CACHE.clear()
+    memo.clear("_bpe_merges")
     t0 = _time.perf_counter()
     small = pq._bpe_merges(spark, SRC)
     t_small = _time.perf_counter() - t0

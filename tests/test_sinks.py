@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from flink_kafka_replicator_spark import memo
 from flink_kafka_replicator_spark.io import load_table
 from flink_kafka_replicator_spark.plans import formatted_plan
 from flink_kafka_replicator_spark.sinks import (
@@ -1004,7 +1005,7 @@ def test_served_snapshot_follows_every_commit(spark, sf_dir, tmp_path, kind):
     pos = 3 if kind == "vector" else 2  # vec_rank / lex_rank
 
     def fresh():
-        sinks._SNAPSHOTS.clear()
+        memo.clear("index_snapshot")
         return serve()
 
     def leg_ids(answers):  # the batch ids this kind's leg served
