@@ -1,7 +1,7 @@
 """SparkSession factory.
 
 Single place where engine-wide performance knobs live so that tests,
-bench.py and the driver entry point all run with the same plan-shaping
+perfbench and the driver entry point all run with the same plan-shaping
 configuration. Designed for a multi-executor cluster (AQE, skew-join
 handling, sane shuffle sizing) even though CI runs local[N].
 """

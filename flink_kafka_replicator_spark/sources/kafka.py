@@ -60,7 +60,6 @@ def kafka_sink_writer(
     bootstrap_servers: str,
     checkpoint_location: str,
     producer_props: dict[str, str] | None = None,
-    transaction_timeout_ms: int | None = None,
 ):
     """DataStreamWriter for the replication sink (at-least-once — the
     reference's default semantic, FlinkKafkaReplicator.java:124; the
@@ -78,12 +77,6 @@ def kafka_sink_writer(
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("checkpointLocation", checkpoint_location)
     )
-    if transaction_timeout_ms is not None:
-        # reference injects transaction.timeout.ms into producer props
-        # (FlinkKafkaReplicator.java:43,90,106)
-        writer = writer.option(
-            "kafka.transaction.timeout.ms", str(transaction_timeout_ms)
-        )
     for k, v in (producer_props or {}).items():
         writer = writer.option(f"kafka.{k}", v)
     return writer

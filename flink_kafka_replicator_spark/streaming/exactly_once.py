@@ -383,6 +383,8 @@ def start_exactly_once_kafka_replication(
         props = {
             k: v for k, v in cfg.producer_props.items() if k != "bootstrap.servers"
         }
+        # reference injects transaction.timeout.ms into producer props
+        # (FlinkKafkaReplicator.java:43,90,106)
         props["transaction.timeout.ms"] = str(cfg.transaction_timeout_ms)
         producer_factory = confluent_producer_factory(servers, **props)
         if control_topic is not None and committed_reader is None:

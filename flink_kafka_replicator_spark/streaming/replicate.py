@@ -137,10 +137,18 @@ def start_kafka_replication(
     cfg: ReplicateConfig,
     checkpoint_location: str,
 ):
-    """Kafka→Kafka replication (requires the Kafka connector package and
-    live brokers; not exercisable in this container — the file harness
-    above covers the dataflow)."""
+    """At-least-once Kafka→Kafka replication through Spark's built-in
+    Kafka sink (requires the Kafka connector package and live brokers;
+    the file harness above covers the dataflow). That sink cannot be
+    transactional, so an exactly-once config is refused here; it runs
+    through ``start_exactly_once_kafka_replication``."""
     cfg.validate()
+    if cfg.exactly_once:
+        raise ValueError(
+            "start_kafka_replication is at-least-once; run an exactly-once "
+            "config through streaming.exactly_once."
+            "start_exactly_once_kafka_replication"
+        )
     df = build_replication(spark, cfg)
     servers = cfg.producer_props.get("bootstrap.servers")
     if not servers:
@@ -151,8 +159,5 @@ def start_kafka_replication(
         bootstrap_servers=servers,
         checkpoint_location=checkpoint_location,
         producer_props=props,
-        transaction_timeout_ms=(
-            cfg.transaction_timeout_ms if cfg.exactly_once else None
-        ),
     ).trigger(processingTime=f"{cfg.checkpoint_interval_ms} milliseconds")
     return writer.start()

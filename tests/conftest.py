@@ -46,6 +46,23 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_terminal_summary(terminalreporter):
+    """Say how many deep-suite tests the default run skipped, and how to
+    run them, so the skip is not silent."""
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
+        return
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if os.path.basename(rep.nodeid.split("::")[0]) in DEEP_SUITE_FILES
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} tests in the deep lifecycle suites (DEEP_SUITE_FILES) "
+            "were skipped; run them with: python tools/deep_suites.py"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_session(

@@ -20,6 +20,7 @@ from flink_kafka_replicator_spark.streaming.exactly_once import (
 from flink_kafka_replicator_spark.streaming.replicate import (
     ReplicateConfig,
     start_file_replication,
+    start_kafka_replication,
 )
 
 import datetime as dt
@@ -115,6 +116,25 @@ def test_transaction_timeout_validation():
     ReplicateConfig(
         topics=".*", checkpoint_interval_ms=10_000, transaction_timeout_ms=5_000
     ).validate()
+
+
+def test_kafka_replication_refuses_exactly_once(spark, tmp_path):
+    """Spark's built-in Kafka sink is at-least-once: an exactly-once
+    config must be refused before any source or query is built, not
+    silently run with weaker delivery."""
+    cfg = ReplicateConfig(
+        topics=".*",
+        exactly_once=True,
+        consumer_props={"bootstrap.servers": "localhost:9"},
+        producer_props={"bootstrap.servers": "localhost:9"},
+    )
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(
+        ValueError, match="start_exactly_once_kafka_replication"
+    ):
+        start_kafka_replication(spark, cfg, str(tmp_path / "ckpt"))
+    assert {q.id for q in spark.streams.active} == before
+    assert not os.path.exists(tmp_path / "ckpt")
 
 
 def test_streaming_tumbling_agg_matches_batch(spark, tmp_path):

@@ -44,7 +44,7 @@ def test_vocab_gate_low_threshold_forces_shuffle_join(
         plan_bc = formatted_plan(fn(spark, sf_dir))
         assert "BroadcastHashJoin" in plan_bc, plan_bc[:2000]
 
-        monkeypatch.setenv("SPARK_GRAFT_VOCAB_BROADCAST_MAX_TERMS", "0")
+        monkeypatch.setattr(pq, "VOCAB_BROADCAST_MAX_TERMS", 0)
         gated = fn(spark, sf_dir)
         plan_sh = formatted_plan(gated)
         assert "BroadcastHashJoin" not in plan_sh, (
@@ -56,7 +56,7 @@ def test_vocab_gate_low_threshold_forces_shuffle_join(
     finally:
         spark.conf.set(thr, prev)
 
-    monkeypatch.setenv("SPARK_GRAFT_VOCAB_BROADCAST_MAX_TERMS", "0")
+    monkeypatch.setattr(pq, "VOCAB_BROADCAST_MAX_TERMS", 0)
     assert _rows(fn(spark, sf_dir)) == _rows(default), (
         "shuffle path answers differ from broadcast path"
     )

@@ -189,26 +189,6 @@ def test_streaming_vector_search_mmr_flag(spark, tmp_path):
     assert got == want
 
 
-def test_bench_solo_era_stamp():
-    """BASELINE_BENCH.json carries the baseline-era calibration and
-    bench.py's report writer exposes the era fields (structural pin:
-    the admissibility logic keys off these)."""
-    import json
-
-    with open(
-        os.path.join(os.path.dirname(__file__), "..", "BASELINE_BENCH.json"),
-        encoding="utf-8",
-    ) as fh:
-        doc = json.load(fh)
-    era = doc["calibration_era"]
-    assert era["sec"] > 0 and era["tolerance"] > 1.0
-
-    import bench
-
-    src = open(bench.__file__, encoding="utf-8").read()
-    assert "solo_admissible" in src and "era" in src
-
-
 def test_dq_monitor_default_checkpoint_colocated(spark, tmp_path, capsys):
     """ADVICE r11: with no --checkpoint-location the dq-monitor
     checkpoint must live INSIDE --output, so deleting the output dir

@@ -1,10 +1,10 @@
-"""Round-13 invariants: phash fan-out guard, bench probe machinery."""
+"""Round-13 invariants: phash fan-out guard, driver-side PQ LUT and MMR
+greedy, probe-curve rank filter."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from flink_kafka_replicator_spark.functions import multimodal
@@ -71,23 +71,6 @@ def test_phash64_signatures_match_reference_loop(spark):
             if 2 * votes[j] > m:
                 sig += (1 << j) if j < 63 else -(1 << 63)
         assert got[doc_id] == (sig, m), doc_id
-
-
-def test_bench_probe_normalization_math():
-    """bench.py's nearest-probe lookup and stability stamp are plain
-    functions of the probe record — pin the arithmetic the settlement
-    protocol rests on."""
-    probes = [(0, 0.4), (15, 0.8), (30, 0.4)]
-
-    def nearest(idx):
-        return min(probes, key=lambda p: abs(p[0] - idx))[1]
-
-    assert nearest(3) == 0.4
-    assert nearest(10) == 0.8
-    assert nearest(22) == 0.8
-    assert nearest(29) == 0.4
-    vals = [p for _, p in probes]
-    assert max(vals) / min(vals) == pytest.approx(2.0)  # unstable > 1.35
 
 
 def test_pq_query_lut_driver_fold_matches_spark_hof(spark):
