@@ -8,6 +8,8 @@ handling, sane shuffle sizing) even though CI runs local[N].
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -90,8 +92,16 @@ def _ship_package(spark: SparkSession) -> None:
     )
     zip_path = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir),
                                    os.path.basename(pkg_dir))
+    # removed at interpreter exit, not after addPyFile: on a cluster the
+    # driver's file server reads this path when executors first fetch it
+    atexit.register(_remove_shipped_zip, zip_path)
     spark.sparkContext.addPyFile(zip_path)
     spark._fkr_pkg_shipped = True  # type: ignore[attr-defined]
+
+
+def _remove_shipped_zip(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def prepare(spark: SparkSession) -> SparkSession:

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
+import zipimport
 from typing import Protocol
 
 from pyspark.sql import DataFrame
@@ -166,14 +168,31 @@ class KafkaTransactionalBatchWriter:
         factory, prefix = self.producer_factory, self.txn_prefix
         transactional = self.transactional
         control_topic = self.control_topic
-        committed: frozenset[str] = frozenset(
+        # only this batch's markers ride in the task closure: the reader
+        # returns every marker the stream ever committed, which would
+        # grow the pickled closure by one entry per partition per
+        # trigger. The trailing "-" keeps b1- from matching b10-p0.
+        batch_prefix = f"b{batch_id}-"
+        markers = (
             self.committed_reader()
             if (control_topic and self.committed_reader is not None)
             else ()
         )
+        committed: frozenset[str] = frozenset(
+            m for m in markers if m.startswith(batch_prefix)
+        )
         cols = df.columns
+        has_partition = "partition" in cols
+        has_timestamp = "timestamp" in cols
+        has_headers = "headers" in cols
 
         def send_partition(rows) -> None:
+            try:
+                _send_partition(rows)
+            finally:
+                _drop_zip_importers()
+
+        def _send_partition(rows) -> None:
             from pyspark import TaskContext
 
             ctx = TaskContext.get()
@@ -201,23 +220,20 @@ class KafkaTransactionalBatchWriter:
             try:
                 sent = 0
                 for row in rows:
+                    partition = row["partition"] if has_partition else None
+                    ts = row["timestamp"] if has_timestamp else None
+                    headers = row["headers"] if has_headers else None
                     produce_with_backpressure(
                         topic=row["topic"],
                         key=bytes(row["key"]) if row["key"] is not None else None,
                         value=bytes(row["value"]) if row["value"] is not None else None,
-                        partition=(
-                            int(row["partition"])
-                            if "partition" in cols and row["partition"] is not None
-                            else -1
-                        ),
+                        partition=int(partition) if partition is not None else -1,
                         timestamp=(
-                            int(row["timestamp"].timestamp() * 1000)
-                            if "timestamp" in cols and row["timestamp"] is not None
-                            else 0
+                            int(ts.timestamp() * 1000) if ts is not None else 0
                         ),
                         headers=(
-                            [(h["key"], bytes(h["value"])) for h in row["headers"]]
-                            if "headers" in cols and row["headers"] is not None
+                            [(h["key"], bytes(h["value"])) for h in headers]
+                            if headers is not None
                             else None
                         ),
                     )
@@ -246,6 +262,29 @@ class KafkaTransactionalBatchWriter:
                 flush()
 
         df.foreachPartition(send_partition)
+
+
+def _drop_zip_importers() -> None:
+    """Forget this worker's cached zip importers at task exit.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``worker_util.setup_spark_files``). On CPython
+    3.11 that makes each ``zipimport.zipimporter`` in
+    ``sys.path_importer_cache`` re-read its whole archive directory, once
+    per importer instance: a reused worker holds one per imported
+    subpackage of ``pyspark.zip``, plus the py4j zip, the spark-core jar
+    and the shipped engine zip, and re-reading them all cost ~80 ms of
+    every task on a 4-vCPU VM. (Later CPython makes the refresh lazy,
+    gh-103200.)
+    Dropping the entries is safe: the path importer cache is rebuilt on
+    demand, and a later import from one of these archives makes one new
+    importer from the process-wide ``zipimport._zip_directory_cache``
+    without reading the archive again.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
 
 
 def confluent_producer_factory(bootstrap_servers: str, **props):
